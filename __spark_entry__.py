@@ -302,8 +302,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             mention_path = oracle_mat.mention_rows(_scale_for(sf_dir))
             mention_rows = spark.read.parquet(mention_path)
         else:
-            # fused one-Arrow-crossing detector (≡ the staged explode path,
-            # equality-tested) — the staged chain would ferry token structs
+            # fused one-Arrow-crossing detector (≡ the UDF chain's explode,
+            # equality-tested) — a UDF chain would ferry token structs
             # through Arrow three times
             from relationextractionpipeline_spark.operators import fused
 
@@ -320,8 +320,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def kg_links(spark, sf_dir):
         """Entity links via the north_star's batched applyInPandas
-        link-scoring stage, max-prior scorer (equality with the in-row and
-        broadcast-join linkers is tested in tests/).  Groups are data-scaled
+        link-scoring stage, max-prior scorer (equality with the fused links
+        kernel and the broadcast-join linker is tested in tests/).  Groups are data-scaled
         ~50k-row buckets of WHOLE conversations (link.groups_for) — the
         per-conversation grouping pays Spark's per-group overhead once per
         conversation (~8.5s of the 12.7s r3 bench line at 30k convs)."""

@@ -7,9 +7,12 @@ hand-schedules batch files over a ``multiprocessing.Pool`` and resumes by
 re-reading a batch-group manifest.  Here:
 
 * config          → argparse (+ optional INI via --config for parity)
-* plan selection  → --mode fused|staged|checkpointed; checkpointed resumes
-                    from per-stage manifests (plans/manifests.py) — the
-                    strictly-stronger replacement for partial execution
+* plan selection  → --mode auto|fused|staged-joinlink|checkpointed
+                    ("staged" is an older spelling of "fused");
+                    checkpointed resumes from per-file-group manifests
+                    (plans/manifests.py, --group-size files per group) —
+                    the strictly-stronger replacement for the reference's
+                    partial execution: a rerun skips every finished group
 * physical split  → Spark scheduling; --cpus/--shuffle-partitions knobs
 * outputs         → native parquet tables + optional reference-format JSONL/
                     human/types files (operators/sinks.py)
@@ -17,7 +20,7 @@ re-reading a batch-group manifest.  Here:
 Example:
     python -m relationextractionpipeline_spark \
         --scale small --out /tmp/kg_out --mode checkpointed \
-        --checkpoint-dir /tmp/kg_ck --reference-formats
+        --checkpoint-dir /tmp/kg_ck --group-size 8 --graph --reference-formats
 """
 
 from __future__ import annotations
@@ -28,10 +31,6 @@ import json
 import os
 import sys
 import time
-
-# partial-execution stage names, in pipeline order (the reference's static
-# step list, main.py:97-98, made explicit)
-STAGES = ["sentences", "parsed", "mentions", "linked", "triples"]
 
 
 def parse_args(argv):
@@ -45,25 +44,21 @@ def parse_args(argv):
     p.add_argument("--out", required=True, help="output directory")
     p.add_argument("--mode", default="fused",
                    choices=["auto", "fused", "staged", "staged-joinlink",
-                            "checkpointed", "partitioned"],
+                            "checkpointed"],
                    help="'auto' probes the KB size and picks fused "
                         "(dict-broadcast linking) vs staged-joinlink "
-                        "(relational linking) automatically")
+                        "(relational linking) automatically; 'staged' is "
+                        "the same path as 'fused'")
     p.add_argument("--checkpoint-dir",
-                   help="manifest dir (mode=checkpointed|partitioned)")
+                   help="manifest dir (mode=checkpointed)")
     p.add_argument("--group-size", type=int, default=8,
-                   help="input files per resumable group (mode=partitioned)")
-    p.add_argument("--start-stage", choices=STAGES,
-                   help="partial execution: first stage to run (reads the "
-                        "previous stage's parquet from --out; analog of the "
-                        "reference's start_step, main.py:85-94)")
-    p.add_argument("--end-stage", choices=STAGES,
-                   help="partial execution: last stage to run")
+                   help="input files per resumable group (mode=checkpointed)")
     p.add_argument("--nel-mode", default="merged",
                    choices=["merged", "ner_only"],
                    help="mention detection: merged (NER+common nouns, the "
                         "main path) or ner_only (ner_nel.py alternative: "
-                        "NEs only, adjacent spans fused)")
+                        "NEs only, adjacent spans fused); mode=checkpointed "
+                        "always runs merged")
     p.add_argument("--cpus", type=int, default=os.cpu_count())
     p.add_argument("--master", default=None)
     p.add_argument("--table-format", default="parquet",
@@ -92,52 +87,6 @@ def parse_args(argv):
             if getattr(args, k.replace("-", "_"), None) is None and k in g:
                 setattr(args, k.replace("-", "_"), g[k])
     return args
-
-
-def run_stage_window(spark, paths, out, start, end, nel_mode):
-    """Partial execution by stage name — the reference's
-    ``partial_execution``/``start_step``/``end_step`` (main.py:85-94), with
-    key-columned parquet stage tables instead of positional batch files.
-    Each executed stage writes ``<out>/<stage>``; a mid-window start reads
-    its predecessor's table from the same directory."""
-    from relationextractionpipeline_spark.operators import (
-        link as link_op,
-        mentions as mentions_op,
-        parse as parse_op,
-        segment as segment_op,
-        triples as triples_op,
-    )
-    from relationextractionpipeline_spark.plans import pipeline
-
-    si = STAGES.index(start or STAGES[0])
-    ei = STAGES.index(end or STAGES[-1])
-    if si > ei:
-        raise SystemExit(f"--start-stage {start} is after --end-stage {end}")
-    transcripts, ekb, fmap = pipeline.load_inputs(spark, paths)
-    kb_bc, kbi_bc, fg_bc = pipeline.build_broadcasts(spark, ekb, fmap)
-
-    def stage_path(st):
-        return os.path.join(out, st)
-
-    cur = None
-    for idx in range(si, ei + 1):
-        st = STAGES[idx]
-        if st == "sentences":
-            cur = segment_op.segment_sentences(transcripts)
-        else:
-            if cur is None:  # mid-window start: resume from the prior table
-                cur = spark.read.parquet(stage_path(STAGES[idx - 1]))
-            if st == "parsed":
-                cur = parse_op.parse_sentences(cur)
-            elif st == "mentions":
-                cur = mentions_op.detect_mentions(cur, kbi_bc, nel_mode)
-            elif st == "linked":
-                cur = link_op.link_mentions_in_row(cur, kb_bc, fg_bc)
-            elif st == "triples":
-                cur = triples_op.extract_triples(cur)
-        cur.write.mode("overwrite").parquet(stage_path(st))
-        cur = spark.read.parquet(stage_path(st))
-    return cur, STAGES[ei]
 
 
 def main(argv=None) -> int:
@@ -182,50 +131,18 @@ def main(argv=None) -> int:
     )
     t0 = time.time()
     os.makedirs(args.out, exist_ok=True)
-    triples_written = False
-    if args.start_stage or args.end_stage:
-        last, end_stage = run_stage_window(
-            spark, paths, args.out, args.start_stage, args.end_stage,
-            args.nel_mode,
-        )
-        if end_stage != "triples":
-            summary = {
-                "mode": "stage-window",
-                "stages": f"{args.start_stage or STAGES[0]}..{end_stage}",
-                "rows": last.count(),
-                "wall_sec": round(time.time() - t0, 2),
-                "out": args.out,
-            }
-            print(json.dumps(summary))
-            spark.stop()
-            return 0
-        run = {"triples": last}
-        parsed = None
-        triples = last
-        triples_written = True  # the window already wrote <out>/triples
-    elif args.mode == "partitioned":
+    if args.mode == "checkpointed":
         ck = args.checkpoint_dir or os.path.join(args.out, "_checkpoints")
-        run = manifests.run_checkpointed_partitioned(
-            spark, paths, ck, group_size=args.group_size
+        run = manifests.run_checkpointed(
+            spark, paths, ck, graph=args.graph, group_size=args.group_size
         )
-        parsed = None
-        triples = run["triples"]
-    elif args.mode == "checkpointed":
-        ck = args.checkpoint_dir or os.path.join(args.out, "_checkpoints")
-        run = manifests.run_checkpointed(spark, paths, ck, graph=args.graph)
-        # reference-format sinks re-derive `parsed` lazily below only when
-        # --reference-formats is set (no unconditional staged re-run)
-        parsed = None
-        triples = run["triples"]
     else:
         run = pipeline.run_pipeline(
             spark, paths, mode=args.mode, nel_mode=args.nel_mode
         )
-        parsed = run.get("parsed")
-        triples = run["triples"]
+    triples = run["triples"]
 
-    if not triples_written:
-        triples.write.mode("overwrite").parquet(os.path.join(args.out, "triples"))
+    triples.write.mode("overwrite").parquet(os.path.join(args.out, "triples"))
     n_triples = spark.read.parquet(os.path.join(args.out, "triples")).count()
 
     if args.graph:
@@ -241,10 +158,7 @@ def main(argv=None) -> int:
             # manifest control — reuse them (resume-safe)
             g = {k: run[k] for k in ("entities", "edges", "predicates")}
         else:
-            staged = run if "links" in run else pipeline.run_pipeline(
-                spark, paths, mode="staged"
-            )
-            g = pipeline.materialize_graph(staged)
+            g = pipeline.materialize_graph(run)
         io = TableIO(spark, args.out)
         io.write(g["entities"], "entities")
         # bucket edges by canonical subject so downstream per-entity joins
@@ -307,8 +221,10 @@ def main(argv=None) -> int:
             ).text(os.path.join(args.out, "ntriples"))
 
     if args.reference_formats:
+        # checkpointed runs carry no sentence table: derive it lazily
+        parsed = run.get("parsed")
         if parsed is None:
-            parsed = pipeline.run_pipeline(spark, paths, mode="staged")["parsed"]
+            parsed = pipeline.parse_turns(spark.read.parquet(paths["transcripts"]))
         # orderBy before write: the sort range-partitions on the key, so
         # each part file is a contiguous ordered range — concatenating parts
         # in filename order reproduces the reference file's bytes exactly

@@ -1,10 +1,16 @@
 """Per-turn orchestration shared by the oracle and the fused Spark stage.
 
-One function owns the turn → sentences → tokens → mentions → links → triples
+One module owns the turn → sentences → tokens → mentions → links → triples
 sequence so the sequential oracle (tests/oracle.py) and the distributed fused
-extractor (operators/fused.py) cannot drift apart: both call
-``extract_turn_triples`` and differ only in how turns are iterated
-(driver loop vs Arrow-batched partitions).
+extractors (operators/fused.py) cannot drift apart: both call
+``extract_turn_triples`` (and the links kernel ``sentence_mentions``) and
+differ only in how turns are iterated (driver loop vs Arrow-batched
+partitions).
+
+``nel_mode`` selects the mention detector: ``'merged'`` (NER analog +
+common-noun merge, nel.py — the main path) or ``'ner_only'`` (the
+reference's ner_nel.py alternative: named entities only, adjacent spans
+fused, ``ner_nel.py:31-44``, ``:139-142``).
 """
 
 from __future__ import annotations
@@ -38,12 +44,26 @@ def cache_counters() -> Tuple[int, int, int]:
     )
 
 
+def sentence_mentions(
+    sent: str,
+    kb_index: Dict[Tuple[str, ...], str],
+    nel_mode: str = "merged",
+) -> Tuple[lx.Sent, List[dict]]:
+    """(tokens, unlinked mentions) of one sentence under ``nel_mode``."""
+    tokens = lx.parse_sentence_soa(sent)  # hot path: no per-token dicts
+    ner_only = nel_mode == "ner_only"
+    return tokens, rules.detect_mentions(
+        tokens, kb_index, include_common=not ner_only, fuse_adjacent=ner_only
+    )
+
+
 def _sentence_triples(
     sent: str,
     kb: Dict[str, Tuple[str, float]],
     kb_index: Dict[Tuple[str, ...], str],
     figer: Dict[str, str],
-    render: bool = True,
+    render: bool,
+    nel_mode: str,
 ) -> List[dict]:
     pins = _SENT_CACHE["pins"]
     if (
@@ -56,11 +76,11 @@ def _sentence_triples(
         _SENT_CACHE["map"] = {}
     m = _SENT_CACHE["map"]
     _SENT_CACHE["lookups"] += 1
-    key = (render, sent)  # rendered and unrendered entries differ in shape
+    # rendered/unrendered entries differ in shape; nel_mode in mentions
+    key = (render, nel_mode, sent)
     got = m.get(key)
     if got is None:
-        tokens = lx.parse_sentence_soa(sent)  # hot path: no per-token dicts
-        mentions = rules.detect_mentions(tokens, kb_index)
+        tokens, mentions = sentence_mentions(sent, kb_index, nel_mode)
         for mm in mentions:
             url, fg = rules.link_mention(str(mm["surface"]), kb, figer)
             mm["url"] = url
@@ -81,6 +101,7 @@ def extract_turn_triples(
     kb_index: Dict[Tuple[str, ...], str],
     figer: Dict[str, str],
     render: bool = True,
+    nel_mode: str = "merged",
 ) -> List[dict]:
     """All triples for one turn's text; ``sent_idx`` counts sentences within
     the turn (the reference's per-file sentence numbering, nel.py:259-264,
@@ -90,7 +111,9 @@ def extract_turn_triples(
     out: List[dict] = []
     sent_idx = 0
     for line_idx, sent in rules.segment_text_with_lines(text or ""):
-        for trip in _sentence_triples(sent, kb, kb_index, figer, render):
+        for trip in _sentence_triples(
+            sent, kb, kb_index, figer, render, nel_mode
+        ):
             out.append({"sent_idx": sent_idx, "line_idx": line_idx, **trip})
         sent_idx += 1
     return out

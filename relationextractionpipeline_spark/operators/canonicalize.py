@@ -53,19 +53,17 @@ def connected_components(
     return _connected_components_minlabel(edges, src, dst, max_iter)
 
 
-# Driver-side CC bound: an edge list at or below this size is collected
-# (two longs per edge — the default ~2M edges is ~32 MB, far under
-# spark.driver.maxResultSize) and closed with a sequential union-find; the
+# Driver-side CC bound, in edges: an edge list at or below it is collected
+# (~32 MB at two longs per edge, far under spark.driver.maxResultSize;
+# string node ids cost more per edge) and closed with a sequential union-find; the
 # distributed star loop handles anything larger.  Same scale-adaptive
 # bounded-collect pattern as the ANN query-side collects
 # (similarity._collect_query_pdf): each star round is ~10 tiny shuffle
 # stages, so a near-empty fixpoint loop costs seconds of pure scheduling
 # at any scale — while the labels of a bounded edge set are a
-# milliseconds-sized sequential job.  Parameterised for production
-# (REX_CC_DRIVER_MAX_EDGES, 0 disables the driver path entirely).
-_CC_DRIVER_MAX_EDGES = int(
-    __import__("os").environ.get("REX_CC_DRIVER_MAX_EDGES", 2_000_000)
-)
+# milliseconds-sized sequential job.  0 disables the driver path entirely
+# (tests/test_cc_driver.py sets it to force the distributed loop).
+_CC_DRIVER_MAX_EDGES = 2_000_000
 
 
 def _cc_driver_labels(base: DataFrame) -> DataFrame:

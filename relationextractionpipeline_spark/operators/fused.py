@@ -1,30 +1,31 @@
-"""Fused turns→triples extractor: one ``mapInPandas`` crossing.
+"""Fused extractors: each is ONE ``mapInPandas`` crossing from turns.
 
-The staged operators (segment → parse → mentions → link → triples) are each
-narrow, so Catalyst pipelines them into one Spark stage — but every pandas
-UDF is a separate Arrow (de)serialization of the intermediate ``tokens`` /
-``mentions`` arrays.  For the hot path that transfer dominates, so this
-operator runs the identical per-turn orchestration
-(``functions/turnproc.extract_turn_triples`` — the same function the oracle
-calls) inside a single ``mapInPandas``: turns in, triple rows out, one Arrow
-crossing, iterator API so broadcast dicts are fetched once per task.
+Segment → parse → detect → link → extract are all narrow per-turn
+functions; run as a chain of pandas UDFs, every link of the chain is a
+separate Arrow (de)serialization of the intermediate ``tokens`` /
+``mentions`` arrays, and that transfer dominates.  So the engine's outputs
+come straight from turns, with the per-turn orchestration in
+``functions/turnproc`` (the same module the oracle calls):
 
-Equality with the staged path is asserted by tests/test_pipeline.py.
+* ``extract_triples_fused`` — turns → triple rows;
+* ``links_fused`` — turns → linked mention rows (the ``links`` table);
+* ``mention_rows_fused`` — turns → unlinked mention rows, for the grouped
+  link scorers (operators/link.py).
+
+The two mention kernels share one per-turn loop.  The iterator API fetches
+the broadcast dicts once per task.  Equality with the sequential oracle is
+asserted by tests/test_pipeline.py.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterator, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.broadcast import Broadcast
 
-from relationextractionpipeline_spark.functions import (
-    lexicon as lx,
-    rules,
-    turnproc,
-)
+from relationextractionpipeline_spark.functions import rules, turnproc
 
 # rel/rel_human are NOT ferried through Arrow: they render natively from
 # these fields after the crossing (operators/triples.with_rel_strings)
@@ -47,6 +48,7 @@ def extract_triples_fused(
     kb_index_bc: Broadcast,
     figer_bc: Broadcast,
     cache_stats: dict | None = None,
+    nel_mode: str = "merged",
 ) -> DataFrame:
     """``cache_stats`` (optional): dict of LongAccumulator under keys
     'lookups'/'hits'/'evictions' — the sentence-memo counters
@@ -64,7 +66,7 @@ def extract_triples_fused(
                 pdf["conv_id"], pdf["turn_idx"], pdf["text"]
             ):
                 for trip in turnproc.extract_turn_triples(
-                    text, kb, kb_index, figer, render=False
+                    text, kb, kb_index, figer, render=False, nel_mode=nel_mode
                 ):
                     rows.append(
                         (
@@ -103,23 +105,25 @@ MENTION_ROW_SCHEMA = (
 )
 
 
-def mention_rows_fused(
-    transcripts: DataFrame, kb_index_bc: Broadcast
+def _mention_rows(
+    transcripts: DataFrame,
+    kb_index_bc: Broadcast,
+    nel_mode: str,
+    link_bcs: Optional[Tuple[Broadcast, Broadcast]] = None,
 ) -> DataFrame:
-    """Fused turns→mention-rows: segment + parse + mention detection in ONE
-    ``mapInPandas`` crossing, emitting the exploded mention-row table
-    directly (same columns as ``mentions.explode_mentions`` over the staged
-    path — equality-tested).
-
-    Rationale: the staged chain serializes the token-struct arrays through
-    Arrow three times (parse out, mentions in/out); per-sentence token
-    tables are ~10× the text's bytes, so at bench scale the staged path
-    spends ~4× the fused path's wall just ferrying structs.  The link stage
-    consumes only mention ROWS, so for link-only jobs nothing else needs to
-    cross."""
+    """The per-turn loop both mention kernels share: segment, parse and
+    detect each sentence, emit one row per mention; with ``link_bcs``
+    (kb, figer) each row also carries ``rules.link_mention``'s
+    (url, figer)."""
+    cols, schema = MENTION_ROW_COLS, MENTION_ROW_SCHEMA
+    if link_bcs is not None:
+        cols = cols + ["url", "figer"]
+        schema += ", url string, figer string"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         kb_index = kb_index_bc.value
+        if link_bcs is not None:
+            kb, figer = link_bcs[0].value, link_bcs[1].value
         for pdf in batches:
             rows = []
             for conv_id, turn_idx, text in zip(
@@ -129,19 +133,45 @@ def mention_rows_fused(
                 for sent_idx, (_li, sent) in enumerate(
                     rules.segment_text_with_lines(text or "")
                 ):
-                    toks = lx.parse_sentence_soa(sent)
-                    for mid, m in enumerate(
-                        rules.detect_mentions(toks, kb_index)
-                    ):
-                        rows.append(
-                            (
-                                conv_id, ti, sent_idx, mid,
-                                int(m["start_tok"]), int(m["end_tok"]),
-                                m["surface"], m["tag"], m["kind"],
-                            )
+                    _toks, ments = turnproc.sentence_mentions(
+                        sent, kb_index, nel_mode
+                    )
+                    for mid, m in enumerate(ments):
+                        row = (
+                            conv_id, ti, sent_idx, mid,
+                            int(m["start_tok"]), int(m["end_tok"]),
+                            m["surface"], m["tag"], m["kind"],
                         )
-            yield pd.DataFrame(rows, columns=MENTION_ROW_COLS)
+                        if link_bcs is not None:
+                            row += rules.link_mention(
+                                str(m["surface"]), kb, figer
+                            )
+                        rows.append(row)
+            yield pd.DataFrame(rows, columns=cols)
 
     return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-        run, schema=MENTION_ROW_SCHEMA
+        run, schema=schema
     )
+
+
+def mention_rows_fused(
+    transcripts: DataFrame, kb_index_bc: Broadcast, nel_mode: str = "merged"
+) -> DataFrame:
+    """Turns → unlinked mention rows (segment + parse + mention detection)
+    in one crossing: the input of the grouped link scorers, which consume
+    only mention rows, so nothing else needs to cross."""
+    return _mention_rows(transcripts, kb_index_bc, nel_mode)
+
+
+def links_fused(
+    transcripts: DataFrame,
+    kb_bc: Broadcast,
+    kb_index_bc: Broadcast,
+    figer_bc: Broadcast,
+    nel_mode: str = "merged",
+) -> DataFrame:
+    """Turns → the ``links`` table in one crossing: every mention row
+    linked by the broadcast-dict linker (``rules.link_mention``, max-prior
+    candidate).  Columns: ``conv_id, turn_idx, sent_idx, mention_id,
+    start_tok, end_tok, surface, tag, kind, url, figer``."""
+    return _mention_rows(transcripts, kb_index_bc, nel_mode, (kb_bc, figer_bc))

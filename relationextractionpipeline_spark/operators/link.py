@@ -7,17 +7,17 @@ the NEL record schema — not the service — is the stable interface (exactly
 the reference's own design: the Spotlight shim at ``ner_nel.py:235-255``
 re-shapes an alternative service to the same record).
 
-Three interchangeable implementations, all producing identical columns:
+The default linker is the broadcast-dict lookup ``rules.link_mention``
+inside the fused kernels (operators/fused.py): zero shuffle, no extra
+Arrow crossing.  This module holds the two interchangeable alternatives,
+equality-tested against it:
 
-1. ``link_mentions_in_row`` — pandas UDF over the ``mentions`` array with a
-   broadcast candidate dict: zero shuffle, the default for the narrow
-   turns→triples fast path.
-2. ``score_links_grouped`` — ``applyInPandas`` grouped by ``conv_id``
+1. ``score_links_grouped`` — ``applyInPandas`` grouped by ``conv_id``
    (BASELINE.json north_star's "batched link-scoring applyInPandas stage"):
    the shape a context-aware scorer needs (all of a conversation's mentions
    in one pandas frame), with group size bounded by conversation length —
    never a fixed fraction of the table, which would OOM executors at scale.
-3. ``link_mentions_broadcast_join`` — pure-native: broadcast-hash equi-joins
+2. ``link_mentions_broadcast_join`` — pure-native: broadcast-hash equi-joins
    against the ``entity_kb`` / ``figer_map`` dimension tables (J3/J4).  The
    scale path when the KB is too big for a Python dict but small enough to
    broadcast; beyond that the same code degrades gracefully to a shuffled
@@ -26,47 +26,15 @@ Three interchangeable implementations, all producing identical columns:
 
 from __future__ import annotations
 
-from typing import Dict, Tuple
+from typing import Dict
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.broadcast import Broadcast
 
 from relationextractionpipeline_spark.functions import rules
-from relationextractionpipeline_spark.plans import schemas
 
 NOT_IN_WIKI_PREFIX = rules.NOT_IN_WIKI_PREFIX
-
-
-def make_link_udf(kb_bc: Broadcast, figer_bc: Broadcast):
-    @F.pandas_udf(schemas.LINKED_MENTIONS)
-    def link_udf(mentions: pd.Series) -> pd.Series:
-        kb: Dict[str, Tuple[str, float]] = kb_bc.value
-        figer: Dict[str, str] = figer_bc.value
-
-        def link_all(ms):
-            out = []
-            for m in ms:
-                d = dict(m)
-                url, fg = rules.link_mention(str(d["surface"]), kb, figer)
-                d["url"] = url
-                d["figer"] = fg
-                out.append(d)
-            return out
-
-        return mentions.map(link_all)
-
-    # deterministic in fact; fenced against InferFiltersFromGenerate cloning
-    # the UDF below a downstream explode (see operators/segment.py)
-    return link_udf.asNondeterministic()
-
-
-def link_mentions_in_row(with_mentions: DataFrame, kb_bc: Broadcast,
-                         figer_bc: Broadcast) -> DataFrame:
-    return with_mentions.withColumn(
-        "mentions", make_link_udf(kb_bc, figer_bc)("mentions")
-    )
-
 
 # context-scorer boost: added to a candidate's prior when its URL is the
 # max-prior link of ANOTHER surface in the same conversation (coreference
@@ -188,7 +156,7 @@ def score_links_grouped(
     proves with its Spotlight shim, ``ner_nel.py:207-255``):
 
     * ``mode='prior'`` — max-prior candidate per surface (equality-tested
-      against the in-row and broadcast-join linkers).
+      against the fused kernels' dict linker and the broadcast-join linker).
     * ``mode='context'`` — the reason this stage is conversation-grouped:
       each candidate's score is ``prior + boost·[url ∈ ctx]`` where ``ctx``
       is the set of max-prior URLs of the OTHER surfaces in the same

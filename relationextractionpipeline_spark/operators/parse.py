@@ -22,11 +22,6 @@ from relationextractionpipeline_spark.functions import lexicon as lx
 from relationextractionpipeline_spark.plans import schemas
 
 
-@F.pandas_udf(schemas.TOKENS)
-def parse_udf(sent: pd.Series) -> pd.Series:
-    return sent.map(lx.parse_sentence)
-
-
 @F.pandas_udf(schemas.PARSE_FULL)
 def parse_full_udf(sent: pd.Series) -> pd.DataFrame:
     # StructType pandas UDFs return a DataFrame, one column per struct field
@@ -44,7 +39,6 @@ def parse_full_udf(sent: pd.Series) -> pd.DataFrame:
 # parse expression into its several consumers (mentions, triples, sinks read
 # different fields of ``_p``) — without the fence the parser ran once per
 # consuming projection.  See operators/segment.py for the pattern rationale.
-parse_udf = parse_udf.asNondeterministic()
 parse_full_udf = parse_full_udf.asNondeterministic()
 
 

@@ -30,8 +30,8 @@ def segment_udf(text: pd.Series) -> pd.Series:
 # The UDF IS deterministic (pure function of text); the marker is an
 # optimizer fence: InferFiltersFromGenerate otherwise clones the expression
 # into an inferred `size(...) > 0` filter below the posexplode, and predicate
-# pushdown substitutes it again through the projection — the staged plan then
-# pays the segmentation Arrow stage TWICE per turn.  The inferred filter buys
+# pushdown substitutes it again through the projection — a UDF-chain plan
+# then pays the segmentation Arrow stage TWICE per turn.  The inferred filter buys
 # nothing (the explode already drops empty arrays), so fencing it off is a
 # pure win; plan-asserted in tests/test_plans.py.
 segment_udf = segment_udf.asNondeterministic()

@@ -30,8 +30,9 @@ def triples_udf(tokens: pd.Series, mentions: pd.Series) -> pd.Series:
 
 
 # Deterministic in fact; fenced so InferFiltersFromGenerate can't clone the
-# whole parse→link→triples UDF chain into an inferred filter below the
-# explode (observed: the staged plan evaluated all three Arrow stages twice).
+# whole segment→parse→mentions→triples UDF chain into an inferred filter
+# below the explode (observed: a UDF-chain plan evaluated every Arrow stage
+# twice).
 # See operators/segment.py for the full rationale.
 triples_udf = triples_udf.asNondeterministic()
 

@@ -1,22 +1,26 @@
-"""Per-stage checkpoint manifests with lineage + counters, and resume.
+"""Checkpoint manifests with lineage + counters, and resume.
 
 The reference's resume story is coarse: re-run a whole *stage* over a
 persisted batch-group manifest (``main.py:85-94``, ``helper_functions.py:
 118-135``) — a failed batch restarts the stage for every batch in that
-worker's group.  The new engine checkpoints each heavy stage to parquet with
-a JSON manifest carrying:
+worker's group.  Here the unit of recovery is a GROUP of input files
+(``PartitionedStageRunner``): each group's output is parquet plus a JSON
+manifest carrying
 
-* an **input fingerprint** (files + sizes + mtimes + stage-code version) so a
-  resume never silently reuses stale output;
+* an **input fingerprint** (the group's files + sizes + mtimes, the
+  dimension tables, the stage-code version) so a resume never silently
+  reuses stale output;
 * **per-partition row counters** (lineage/observability: which partition
   produced how many rows);
 * total rows and output path.
 
-``CheckpointedRunner.stage`` is idempotent: a valid manifest (fingerprint
-match + parquet ``_SUCCESS``) short-circuits to a scan of the materialized
-output — a killed run resumes without recomputing completed stages
-(BASELINE.json north_rule "resumable from checkpoint with per-partition
-lineage + metrics").
+A valid manifest (fingerprint match + parquet ``_SUCCESS``) short-circuits
+to a scan of the materialized output, so a killed run recomputes only the
+groups that had not published (BASELINE.json north_rule "resumable from
+checkpoint with per-partition lineage + metrics").  ``run_checkpointed`` is
+the one checkpointed pipeline: per-group ``triples`` (and ``links``) from
+the fused kernels, then the graph tail as whole-input stages under the
+same manifest format.
 """
 
 from __future__ import annotations
@@ -55,72 +59,6 @@ def input_fingerprint(paths: List[str], extra: str = "") -> str:
     return h.hexdigest()[:24]
 
 
-class CheckpointedRunner:
-    def __init__(self, spark: SparkSession, checkpoint_dir: str):
-        self.spark = spark
-        self.dir = checkpoint_dir
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        self.events: List[Dict] = []  # (stage, 'computed'|'resumed') log
-
-    def _manifest_path(self, name: str) -> str:
-        return os.path.join(self.dir, f"{name}._manifest.json")
-
-    def _out_path(self, name: str) -> str:
-        return os.path.join(self.dir, name)
-
-    def read_manifest(self, name: str) -> Optional[Dict]:
-        p = self._manifest_path(name)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
-
-    def is_complete(self, name: str, fingerprint: str) -> bool:
-        m = self.read_manifest(name)
-        if m is None or m.get("fingerprint") != fingerprint:
-            return False
-        return os.path.exists(os.path.join(self._out_path(name), "_SUCCESS"))
-
-    def stage(
-        self,
-        name: str,
-        fingerprint: str,
-        build: Callable[[], DataFrame],
-    ) -> DataFrame:
-        """Return the stage output, computing + materializing only if no
-        valid checkpoint exists."""
-        out = self._out_path(name)
-        if self.is_complete(name, fingerprint):
-            self.events.append({"stage": name, "action": "resumed"})
-            # _pid is manifest bookkeeping, not stage schema — never leak it
-            return self.spark.read.parquet(out).drop("_pid")
-        t0 = time.time()
-        df = build().withColumn("_pid", F.spark_partition_id())
-        df.write.mode("overwrite").parquet(out)
-        part_counts = [
-            {"pid": int(r["_pid"]), "rows": int(r["cnt"])}
-            for r in self.spark.read.parquet(out)
-            .groupBy("_pid")
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        ]
-        manifest = {
-            "stage": name,
-            "fingerprint": fingerprint,
-            "output": out,
-            "rows": sum(p["rows"] for p in part_counts),
-            "n_partitions": len(part_counts),
-            "partitions": sorted(part_counts, key=lambda p: p["pid"]),
-            "wall_sec": round(time.time() - t0, 3),
-        }
-        tmp = self._manifest_path(name) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, self._manifest_path(name))  # atomic publish
-        self.events.append({"stage": name, "action": "computed"})
-        return self.spark.read.parquet(out).drop("_pid")
-
-
 class PartitionedStageRunner:
     """Partition-level (sub-stage) resume: the unit of recovery is a GROUP of
     input files, not a whole stage.
@@ -129,10 +67,11 @@ class PartitionedStageRunner:
     runs one Spark job per group, atomically publishes each group's parquet +
     manifest line, and on resume skips every group whose manifest matches the
     fingerprint — a run killed mid-stage recomputes only the group that was
-    in flight.  This strictly dominates the reference's resume story twice
-    over: the reference restarts a whole *stage* for every batch in a
-    worker's group (``main.py:85-94``), and the stage-level
-    CheckpointedRunner above restarts one stage.
+    in flight.  This strictly dominates the reference's resume story, which
+    restarts a whole *stage* for every batch in a worker's group
+    (``main.py:85-94``).  Stages whose every row depends on
+    the whole input (the graph tail) run as ONE group over all files
+    (``whole``) — same manifest format, same write/count/publish path.
 
     Scale note: each group job is a normal distributed job over that group's
     input splits (files ≫ groups ≫ 1), so executors stay busy within a
@@ -178,6 +117,75 @@ class PartitionedStageRunner:
             groups[h % n_buckets].append(f)
         return groups
 
+    def _manifest(self, name: str, gi: int) -> Optional[Dict]:
+        mpath = self._group_manifest(name, gi)
+        if not os.path.exists(mpath):
+            return None
+        with open(mpath) as f:
+            return json.load(f)
+
+    def is_complete(
+        self, name: str, gi: int, files: List[str], fingerprint: str
+    ) -> bool:
+        """Group ``gi`` of stage ``name`` has published output for exactly
+        these files under this shared fingerprint."""
+        m = self._manifest(name, gi)
+        return (
+            m is not None
+            and m.get("fingerprint") == input_fingerprint(files, extra=fingerprint)
+            and m.get("files") == files
+            and os.path.exists(
+                os.path.join(self._stage_dir(name), f"g{gi:05d}", "_SUCCESS")
+            )
+        )
+
+    def _group(
+        self,
+        name: str,
+        gi: int,
+        files: List[str],
+        fingerprint: str,
+        build: Callable[[List[str]], DataFrame],
+    ) -> str:
+        """Materialize one group unless its checkpoint is valid; return the
+        group's output directory."""
+        gout = os.path.join(self._stage_dir(name), f"g{gi:05d}")
+        if self.is_complete(name, gi, files, fingerprint):
+            self.events.append({"stage": name, "group": gi, "action": "resumed"})
+            return gout
+        os.makedirs(self._stage_dir(name), exist_ok=True)
+        t0 = time.time()
+        df = build(files).withColumn("_pid", F.spark_partition_id())
+        df.write.mode("overwrite").parquet(gout)
+        part_counts = [
+            {"pid": int(r["_pid"]), "rows": int(r["cnt"])}
+            for r in self.spark.read.parquet(gout)
+            .groupBy("_pid")
+            .agg(F.count("*").alias("cnt"))
+            .collect()
+        ]
+        manifest = {
+            "stage": name,
+            "group": gi,
+            "files": files,
+            "fingerprint": input_fingerprint(files, extra=fingerprint),
+            "output": gout,
+            "rows": sum(p["rows"] for p in part_counts),
+            "partitions": sorted(part_counts, key=lambda p: p["pid"]),
+            "wall_sec": round(time.time() - t0, 3),
+        }
+        mpath = self._group_manifest(name, gi)
+        tmp = mpath + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(manifest, f, indent=1)
+        os.replace(tmp, mpath)  # atomic publish AFTER the data _SUCCESS
+        self.events.append({"stage": name, "group": gi, "action": "computed"})
+        return gout
+
+    def _scan(self, outs: List[str]) -> DataFrame:
+        # _pid is manifest bookkeeping, not stage schema — never leak it
+        return self.spark.read.parquet(*outs).drop("_pid")
+
     def stage(
         self,
         name: str,
@@ -195,58 +203,27 @@ class PartitionedStageRunner:
         list or file bytes actually changed, never the whole stage.  (A
         dimension-table change still invalidates everything — correct:
         every group's output depends on the dims.)"""
-        sdir = self._stage_dir(name)
-        os.makedirs(sdir, exist_ok=True)
         groups = self.plan_groups(input_files, group_size)
-        for gi, files in enumerate(groups):
-            if not files:  # empty hash bucket — stable index, nothing to run
-                continue
-            gfp = input_fingerprint(files, extra=fingerprint)
-            gout = os.path.join(sdir, f"g{gi:05d}")
-            mpath = self._group_manifest(name, gi)
-            if os.path.exists(mpath):
-                with open(mpath) as f:
-                    m = json.load(f)
-                if (
-                    m.get("fingerprint") == gfp
-                    and m.get("files") == files
-                    and os.path.exists(os.path.join(gout, "_SUCCESS"))
-                ):
-                    self.events.append(
-                        {"stage": name, "group": gi, "action": "resumed"}
-                    )
-                    continue
-            t0 = time.time()
-            df = build(files).withColumn("_pid", F.spark_partition_id())
-            df.write.mode("overwrite").parquet(gout)
-            part_counts = [
-                {"pid": int(r["_pid"]), "rows": int(r["cnt"])}
-                for r in self.spark.read.parquet(gout)
-                .groupBy("_pid")
-                .agg(F.count("*").alias("cnt"))
-                .collect()
-            ]
-            manifest = {
-                "stage": name,
-                "group": gi,
-                "files": files,
-                "fingerprint": gfp,
-                "output": gout,
-                "rows": sum(p["rows"] for p in part_counts),
-                "partitions": sorted(part_counts, key=lambda p: p["pid"]),
-                "wall_sec": round(time.time() - t0, 3),
-            }
-            tmp = mpath + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f, indent=1)
-            os.replace(tmp, mpath)  # atomic publish AFTER the data _SUCCESS
-            self.events.append({"stage": name, "group": gi, "action": "computed"})
-        outs = [
-            os.path.join(sdir, f"g{gi:05d}")
-            for gi, fs in enumerate(groups)
-            if fs
-        ]
-        return self.spark.read.parquet(*outs).drop("_pid")
+        return self._scan([
+            self._group(name, gi, files, fingerprint, build)
+            for gi, files in enumerate(groups)
+            if files  # empty hash bucket — stable index, nothing to run
+        ])
+
+    def whole(
+        self,
+        name: str,
+        fingerprint: str,
+        input_files: List[str],
+        build: Callable[[], DataFrame],
+    ) -> DataFrame:
+        """A stage whose output depends on every input file: one group
+        (index 0) over all of them (``input_files`` sorted, as
+        ``list_parquet_files`` returns them), so touching any file
+        recomputes it."""
+        return self._scan([
+            self._group(name, 0, input_files, fingerprint, lambda _fs: build())
+        ])
 
 
 def list_parquet_files(path: str) -> List[str]:
@@ -262,14 +239,30 @@ def list_parquet_files(path: str) -> List[str]:
     return sorted(out)
 
 
-def run_checkpointed_partitioned(
+def run_checkpointed(
     spark: SparkSession,
     paths: Dict[str, str],
     checkpoint_dir: str,
+    graph: bool = False,
     group_size: int = 8,
 ) -> Dict[str, DataFrame]:
-    """Fused turns→triples with partition-level resume: input transcript
-    files grouped; each group is one resumable unit."""
+    """The checkpointed pipeline: fused turns→triples with partition-level
+    resume (input transcript files grouped; each group is one resumable
+    unit), optionally + the graph tail.
+
+    ``graph=True`` adds per-group ``links`` (the fused links kernel) and
+    three whole-input stages: ``predicates``, ``entities``, ``edges`` — a
+    kill in the graph tail never re-pays the extraction, and the
+    predicates stage resumes independently.  Entities and edges are the two
+    outputs of ONE eager ``canonicalize()`` call (the entity CC), so they
+    form one recovery unit: a kill between the entities write and the
+    edges write re-runs that clustering on restart (both stages' writes,
+    not the upstream extraction).
+    """
+    from relationextractionpipeline_spark.operators import (
+        canonicalize as canon_op,
+        fused,
+    )
     from relationextractionpipeline_spark.plans import pipeline as pl
 
     # dims-only shared fingerprint: the transcripts are fingerprinted
@@ -277,108 +270,53 @@ def run_checkpointed_partitioned(
     # the groups that gained files
     fp = input_fingerprint([paths["entity_kb"], paths["figer_map"]])
     runner = PartitionedStageRunner(spark, checkpoint_dir)
-    transcripts, entity_kb, figer_map = pl.load_inputs(spark, paths)
-    kb_bc, kb_index_bc, figer_bc = pl.build_broadcasts(spark, entity_kb, figer_map)
+    _transcripts, entity_kb, figer_map = pl.load_inputs(spark, paths)
+    bcs = pl.build_broadcasts(spark, entity_kb, figer_map)
     files = list_parquet_files(paths["transcripts"])
-    triples = runner.stage(
-        "triples",
-        fp,
-        files,
-        lambda fs: pl.run_fused(
-            spark.read.parquet(*fs), kb_bc, kb_index_bc, figer_bc
-        ),
-        group_size=group_size,
-    )
-    return {"triples": triples, "runner": runner}
 
-
-def run_checkpointed(
-    spark: SparkSession,
-    paths: Dict[str, str],
-    checkpoint_dir: str,
-    graph: bool = False,
-) -> Dict[str, DataFrame]:
-    """Checkpointed staged pipeline: sentences → links+tokens → triples,
-    optionally + the graph tail (predicates / entities / edges) as three
-    more manifest-gated stages — the north rule's "every stage checkpoints
-    … resumes without recomputation" extended to canonicalization: a kill
-    in the graph tail never re-pays the extraction, and the predicates
-    stage resumes independently.  Entities and edges are the two outputs of
-    ONE eager ``canonicalize()`` call (the entity CC), so they form one
-    recovery unit: a kill between the entities write and the edges write
-    re-runs that clustering on restart (both stages' writes, not the
-    upstream extraction).
-
-    Each stage's fingerprint chains the input files, so editing the input (or
-    bumping STAGE_CODE_VERSION) invalidates downstream checkpoints while a
-    plain kill/restart reuses everything already finished.
-    """
-    from relationextractionpipeline_spark.plans import pipeline as pl
-    from relationextractionpipeline_spark.operators import (
-        link as link_op,
-        mentions as mentions_op,
-        parse as parse_op,
-        segment as segment_op,
-        triples as triples_op,
-    )
-
-    inputs = [paths["transcripts"], paths["entity_kb"], paths["figer_map"]]
-    fp = input_fingerprint(inputs)
-    runner = CheckpointedRunner(spark, checkpoint_dir)
-
-    transcripts, entity_kb, figer_map = pl.load_inputs(spark, paths)
-    kb_bc, kb_index_bc, figer_bc = pl.build_broadcasts(spark, entity_kb, figer_map)
-
-    sentences = runner.stage(
-        "sentences", fp, lambda: segment_op.segment_sentences(transcripts)
-    )
-    linked = runner.stage(
-        "linked",
-        fp,
-        lambda: link_op.link_mentions_in_row(
-            mentions_op.detect_mentions(
-                parse_op.parse_sentences(sentences), kb_index_bc
-            ),
-            kb_bc,
-            figer_bc,
-        ),
-    )
-    triples = runner.stage(
-        "triples",
-        fp,
-        lambda: triples_op.extract_triples(linked),
-    )
-    out = {
-        "sentences": sentences,
-        "linked": linked,
-        "triples": triples,
-        "runner": runner,
-    }
-    if graph:
-        from relationextractionpipeline_spark.operators import (
-            canonicalize as canon_op,
+    def per_group(name, kernel):
+        return runner.stage(
+            name,
+            fp,
+            files,
+            lambda fs: kernel(spark.read.parquet(*fs), *bcs),
+            group_size=group_size,
         )
 
-        # predicates first: the edges stage rewrites onto pred_canonical /
-        # pred_id, so its build joins the materialized predicate map — the
-        # checkpointed edges schema stays identical to materialize_graph's
-        # (plans/pipeline.py), which every other mode produces
-        pred_map = runner.stage(
-            "predicates", fp, lambda: canon_op.canonicalize_predicates(triples)
-        )
-        out["predicates"] = pred_map
-        # canonicalize() runs the iterative CC eagerly (Spark actions), so
-        # only invoke it when at least one of its two outputs is missing —
-        # a fully-resumed run must not pay the clustering again
-        if runner.is_complete("entities", fp) and runner.is_complete("edges", fp):
-            ents_df = edges_df = None
-        else:
-            links = mentions_op.explode_mentions(linked)
-            ents_df, edges_df = canon_op.canonicalize(triples, links)
-        out["entities"] = runner.stage("entities", fp, lambda: ents_df)
-        out["edges"] = runner.stage(
+    triples = per_group("triples", pl.run_fused)
+    out = {"triples": triples, "runner": runner}
+    if not graph:
+        return out
+    links = per_group("links", fused.links_fused)
+    # predicates first: the edges stage rewrites onto pred_canonical /
+    # pred_id, so its build joins the materialized predicate map — the
+    # checkpointed edges schema stays identical to materialize_graph's
+    # (plans/pipeline.py), which every other mode produces
+    pred_map = runner.whole(
+        "predicates", fp, files, lambda: canon_op.canonicalize_predicates(triples)
+    )
+    # canonicalize() runs the iterative CC eagerly (Spark actions), so
+    # only invoke it when at least one of its two outputs is missing —
+    # a fully-resumed run must not pay the clustering again
+    if all(
+        runner.is_complete(s, 0, files, fp) for s in ("entities", "edges")
+    ):
+        ents_df = edges_df = None
+    else:
+        ents_df, edges_df = canon_op.canonicalize(triples, links)
+    out.update(
+        links=links,
+        predicates=pred_map,
+        entities=runner.whole("entities", fp, files, lambda: ents_df),
+        edges=runner.whole(
             "edges",
             fp,
+            files,
             lambda: edges_df.join(F.broadcast(pred_map), "pred", "left"),
-        )
+        ),
+    )
     return out
+
+
+# older name of the same pipeline (kgbench/workloads.py calls it)
+run_checkpointed_partitioned = run_checkpointed

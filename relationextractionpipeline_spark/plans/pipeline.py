@@ -15,6 +15,14 @@ Physical design (SURVEY.md §7):
   type map once per process (``nel.py:246-248``) instead of per sentence.
 * Catalyst pipelines the whole narrow chain into one stage; column pruning
   pushes the parquet scan down to exactly (conv_id, turn_idx, text).
+
+Two extraction paths, chosen by KB size (``run_pipeline``):
+
+* dict-broadcast (modes ``fused``/``staged``, the same code): ``triples``
+  and ``links`` each come from one fused ``mapInPandas`` kernel
+  (operators/fused.py) — one Arrow crossing per output, no UDF chain;
+* ``staged-joinlink``: a chain of pandas UDFs whose linking is relational
+  joins, for a KB too big to ship to workers as a Python dict.
 """
 
 from __future__ import annotations
@@ -110,31 +118,11 @@ def build_gazetteer_broadcast(spark: SparkSession, entity_kb: DataFrame):
     return spark.sparkContext.broadcast(kb_index)
 
 
-def run_staged(
-    transcripts: DataFrame,
-    kb_bc,
-    kb_index_bc,
-    figer_bc,
-    nel_mode: str = "merged",
-) -> Dict[str, DataFrame]:
-    """Modular stage-per-operator path (unit-testable; materializes the
-    intermediate tables the reference kept as stage directories).
-    ``nel_mode`` selects the mention detector: 'merged' (main path) or
-    'ner_only' (the ner_nel.py alternative — see operators/mentions.py)."""
-    sentences = segment.segment_sentences(transcripts)
-    parsed = parse.parse_sentences(sentences)
-    with_mentions = mentions_op.detect_mentions(parsed, kb_index_bc, nel_mode)
-    linked = link.link_mentions_in_row(with_mentions, kb_bc, figer_bc)
-    triples = triples_op.extract_triples(linked)
-    return {
-        "sentences": sentences,
-        "parsed": parsed,
-        "with_mentions": with_mentions,
-        "linked": linked,
-        "links": mentions_op.explode_mentions(linked),
-        "triples": triples,
-        "types": triples_op.distinct_types(triples),
-    }
+def parse_turns(transcripts: DataFrame) -> DataFrame:
+    """Turns → parsed sentence rows (``tokens``, ``surface_tokens``,
+    ``mwt``): the input of the reference-format sinks (operators/sinks.py)
+    and of the joinlink path.  Lazy — nothing runs unless consumed."""
+    return parse.parse_sentences(segment.segment_sentences(transcripts))
 
 
 def materialize_graph(run: Dict[str, DataFrame]) -> Dict[str, DataFrame]:
@@ -143,7 +131,7 @@ def materialize_graph(run: Dict[str, DataFrame]) -> Dict[str, DataFrame]:
     triples onto canonical entity/predicate ids.  Separate from run_pipeline
     because CC is iterative (runs Spark actions); callers opt in."""
     # triples feed entity canonicalization, predicate canonicalization and
-    # the edge rewrite — checkpoint once so the extraction UDF chain doesn't
+    # the edge rewrite — checkpoint once so the extraction kernel doesn't
     # re-run per consumer (in a production run this is the materialized
     # triples stage from plans/manifests.py instead)
     triples = cache.checkpoint(run["triples"])
@@ -170,18 +158,17 @@ def run_staged_joinlink(
     is exactly the price of a KB that no longer ships to workers whole.  The
     mention-DETECTION gazetteer (kb_index) still broadcasts — at real scale
     that side is the surface→candidate index, orders of magnitude smaller
-    than the full candidate table.  Output schema identical to run_staged
-    (equality-tested)."""
+    than the full candidate table.  ``triples`` and ``links`` equal the
+    fused path's (equality-tested)."""
     from relationextractionpipeline_spark.operators import cache
 
-    sentences = segment.segment_sentences(transcripts)
     # parsed feeds BOTH sides of the regroup join (the mention explode branch
     # and the sentence left side) — persist so the segment+parse Arrow stages
     # run once, not once per branch.  In a production run this is the
     # materialized parse-stage table from plans/manifests.py instead.
     # Tracked persist: the caller owns the cache scope (operators/cache.py) —
     # release_all() or clearCache() once the run's outputs are materialized.
-    parsed = cache.track(parse.parse_sentences(sentences))
+    parsed = cache.track(parse_turns(transcripts))
     with_mentions = mentions_op.detect_mentions(parsed, kb_index_bc, nel_mode)
     rows = mentions_op.explode_mentions(with_mentions)
     linked_rows = link.link_mentions_broadcast_join(rows, entity_kb, figer_map)
@@ -200,14 +187,13 @@ def run_staged_joinlink(
         )
     )
     # left join: sentences with zero mentions keep an empty array (P7 rows
-    # still flow to the sinks, as in run_staged)
+    # still flow to the sinks)
     linked = parsed.drop("mentions").join(regrouped, keys, "left").withColumn(
         "mentions",
         F.coalesce(F.col("mentions"), F.array().cast(regrouped.schema["mentions"].dataType)),
     )
     triples = triples_op.extract_triples(linked)
     return {
-        "sentences": sentences,
         "parsed": parsed,
         "with_mentions": with_mentions,
         "linked": linked,
@@ -223,10 +209,12 @@ def run_fused(
     kb_index_bc,
     figer_bc,
     cache_stats: Optional[dict] = None,
+    nel_mode: str = "merged",
 ) -> DataFrame:
     """Hot path: one Arrow crossing turns→triples."""
     return fused.extract_triples_fused(
-        transcripts, kb_bc, kb_index_bc, figer_bc, cache_stats=cache_stats
+        transcripts, kb_bc, kb_index_bc, figer_bc, cache_stats=cache_stats,
+        nel_mode=nel_mode,
     )
 
 
@@ -257,6 +245,11 @@ def run_pipeline(
     linking strategy: dict-broadcast fused path while the KB fits worker
     memory, relational ``staged-joinlink`` beyond ``AUTO_JOINLINK_KB_ROWS``
     — the selection the two equality-tested paths existed for.
+
+    Every mode returns ``triples``, ``links``, ``types`` and the lazy
+    ``parsed`` sentence table (sink input), plus the loaded inputs and
+    ``assembled``.  ``nel_mode`` ('merged' | 'ner_only') selects the
+    mention detector on every path.
     """
     transcripts, entity_kb, figer_map = load_inputs(spark, paths)
     if input_partitions:
@@ -278,12 +271,19 @@ def run_pipeline(
         out["figer_map"] = figer_map
         out["assembled"] = assemble.assemble_conversations(transcripts)
         return out
+    # "fused" and "staged" (the older spelling, still accepted) are one path
     kb_bc, kb_index_bc, figer_bc = build_broadcasts(spark, entity_kb, figer_map)
-    if mode == "fused":
-        triples = run_fused(transcripts, kb_bc, kb_index_bc, figer_bc)
-        out = {"triples": triples, "types": triples_op.distinct_types(triples)}
-    else:
-        out = run_staged(transcripts, kb_bc, kb_index_bc, figer_bc, nel_mode)
+    triples = run_fused(
+        transcripts, kb_bc, kb_index_bc, figer_bc, nel_mode=nel_mode
+    )
+    out = {
+        "triples": triples,
+        "links": fused.links_fused(
+            transcripts, kb_bc, kb_index_bc, figer_bc, nel_mode
+        ),
+        "types": triples_op.distinct_types(triples),
+        "parsed": parse_turns(transcripts),
+    }
     out["transcripts"] = transcripts
     out["entity_kb"] = entity_kb
     out["figer_map"] = figer_map

@@ -80,16 +80,6 @@ MENTION = T.StructType(
 )
 MENTIONS = T.ArrayType(MENTION)
 
-# T5 output: linked mention (nel.py:286-315 record shape, token-offset native)
-LINKED_MENTION = T.StructType(
-    MENTION.fields
-    + [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("figer", T.StringType(), False),
-    ]
-)
-LINKED_MENTIONS = T.ArrayType(LINKED_MENTION)
-
 # R1-R9 output triple (binary_relation.py:232 tuple, made columnar).  The
 # serialized rel/rel_human strings are NOT part of the UDF output: they are
 # pure functions of these fields and render as native Column expressions

@@ -9,7 +9,6 @@ import pandas as pd
 import pytest
 
 from relationextractionpipeline_spark.operators import (
-    mentions as mentions_op,
     multimodal,
     similarity,
     sketches,
@@ -25,19 +24,37 @@ def data_dir(tmp_path_factory):
     return str(tmp_path_factory.mktemp("oracle_mat"))
 
 
-def test_mention_rows_match_spark_explode(spark, data_dir):
+def test_links_kernel_matches_mention_rows_and_link_replay(spark, data_dir):
+    """The fused links kernel ≡ the sequential mention rows plus a
+    sequential ``rules.link_mention`` replay, row for row, with the
+    ``links`` table's columns and dtypes (those of
+    ``mentions.explode_mentions`` over a linked sentence table)."""
+    from relationextractionpipeline_spark.functions import rules
+    from relationextractionpipeline_spark.operators import fused
+    from tests import oracle as orc
+
     seq = pd.read_parquet(oracle_mat.mention_rows("tiny", data_dir))
     paths = oracle_mat.testgen.materialize("tiny", data_dir)
     transcripts, entity_kb, figer_map = pipeline.load_inputs(spark, paths)
     kb_bc, kbi_bc, figer_bc = pipeline.build_broadcasts(
         spark, entity_kb, figer_map
     )
-    staged = pipeline.run_staged(transcripts, kb_bc, kbi_bc, figer_bc)
-    sp = mentions_op.explode_mentions(staged["with_mentions"]).toPandas()
-    cols = ["conv_id", "turn_idx", "sent_idx", "mention_id", "start_tok",
-            "end_tok", "surface", "tag", "kind"]
-    a = seq[cols].sort_values(cols).reset_index(drop=True)
-    b = sp[cols].astype(seq[cols].dtypes).sort_values(cols).reset_index(drop=True)
+    links = fused.links_fused(transcripts, kb_bc, kbi_bc, figer_bc)
+    assert links.dtypes == [
+        ("conv_id", "string"), ("turn_idx", "int"), ("sent_idx", "int"),
+        ("mention_id", "int"), ("start_tok", "int"), ("end_tok", "int"),
+        ("surface", "string"), ("tag", "string"), ("kind", "string"),
+        ("url", "string"), ("figer", "string"),
+    ]
+    kb = orc.build_kb_dict(pd.read_parquet(paths["entity_kb"]))
+    fg = orc.build_figer_dict(pd.read_parquet(paths["figer_map"]))
+    linked = [rules.link_mention(s, kb, fg) for s in seq["surface"]]
+    seq = seq.assign(url=[u for u, _ in linked], figer=[f for _, f in linked])
+    cols = list(seq.columns)
+    a = seq.sort_values(cols).reset_index(drop=True)
+    sp = links.toPandas()
+    assert list(sp.columns) == cols
+    b = sp.astype(seq.dtypes).sort_values(cols).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
 
 

@@ -1,5 +1,5 @@
-"""Distributed correctness: P/R gate vs the sequential oracle, staged≡fused,
-invariants (text equality, lineage), metamorphic partition invariance
+"""Distributed correctness: P/R gate vs the sequential oracle, the fused
+kernels ≡ the joinlink UDF chain, invariants (text equality, lineage), metamorphic partition invariance
 (SURVEY.md §5.1/§5.3/§5.4; BASELINE.md gates)."""
 
 from __future__ import annotations
@@ -8,7 +8,12 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from relationextractionpipeline_spark.operators import assemble, link, mentions as mentions_op
+from relationextractionpipeline_spark.operators import (
+    assemble,
+    fused,
+    link,
+    mentions as mentions_op,
+)
 from relationextractionpipeline_spark.plans import pipeline
 from tests import oracle as orc
 
@@ -54,11 +59,69 @@ def test_precision_recall_gate(run, oracle_triples):
     assert got == want
 
 
+LINK_COLS = [
+    "conv_id", "turn_idx", "sent_idx", "mention_id", "start_tok", "end_tok",
+    "surface", "tag", "kind", "url", "figer",
+]
+
+
+def _sorted_pdf(df, cols):
+    return df.select(cols).toPandas().sort_values(cols).reset_index(drop=True)
+
+
 def test_fused_equals_staged(spark, tiny_paths, run):
+    """"staged" is the older spelling of the fused path: both return the
+    same triples and the same fused links."""
     fused_run = pipeline.run_pipeline(spark, tiny_paths, mode="fused")
     a = _triple_set(fused_run["triples"].toPandas())
     b = _triple_set(run["triples"].toPandas())
     assert a == b
+    pd.testing.assert_frame_equal(
+        _sorted_pdf(fused_run["links"], LINK_COLS),
+        _sorted_pdf(run["links"], LINK_COLS),
+    )
+
+
+def test_ner_only_reaches_the_fused_kernels(spark, tiny_paths, tiny_pandas):
+    """nel_mode='ner_only' on the fused path: no common-noun (G) flag on any
+    triple, and the links equal a sequential ner_only detect + link
+    replay row for row."""
+    from relationextractionpipeline_spark.functions import lexicon as lx, rules
+
+    run = pipeline.run_pipeline(
+        spark, tiny_paths, mode="fused", nel_mode="ner_only"
+    )
+    kinds = run["triples"].select("subj_kind", "obj_kind").toPandas()
+    assert len(kinds) > 0
+    assert set(kinds["subj_kind"]) | set(kinds["obj_kind"]) == {"E"}
+
+    kb = orc.build_kb_dict(tiny_pandas["entity_kb"])
+    kbi = orc.build_kb_index(tiny_pandas["entity_kb"])
+    fg = orc.build_figer_dict(tiny_pandas["figer_map"])
+    rows = []
+    src = tiny_pandas["transcripts"]
+    for conv_id, turn_idx, text in zip(src["conv_id"], src["turn_idx"], src["text"]):
+        for sent_idx, (_li, sent) in enumerate(
+            rules.segment_text_with_lines(text or "")
+        ):
+            for mid, m in enumerate(
+                rules.detect_mentions(
+                    lx.parse_sentence(sent), kbi,
+                    include_common=False, fuse_adjacent=True,
+                )
+            ):
+                url, figer = rules.link_mention(m["surface"], kb, fg)
+                rows.append((
+                    conv_id, int(turn_idx), sent_idx, mid, m["start_tok"],
+                    m["end_tok"], m["surface"], m["tag"], m["kind"], url,
+                    figer,
+                ))
+    got = _sorted_pdf(run["links"], LINK_COLS)
+    want = pd.DataFrame(rows, columns=LINK_COLS).sort_values(LINK_COLS)
+    assert set(want["kind"]) == {"ner"}
+    pd.testing.assert_frame_equal(
+        got, want.reset_index(drop=True).astype(got.dtypes)
+    )
 
 
 def test_partition_count_does_not_change_triples(spark, tiny_paths, oracle_triples):
@@ -91,9 +154,7 @@ def test_empty_input_produces_empty_outputs(spark, tiny_paths):
     _, entity_kb, figer_map = pl.load_inputs(spark, tiny_paths)
     kb_bc, kbi_bc, fg_bc = pl.build_broadcasts(spark, entity_kb, figer_map)
     assert pl.run_fused(empty, kb_bc, kbi_bc, fg_bc).count() == 0
-    staged = pl.run_staged(empty, kb_bc, kbi_bc, fg_bc)
-    assert staged["triples"].count() == 0
-    assert staged["links"].count() == 0
+    assert fused.links_fused(empty, kb_bc, kbi_bc, fg_bc).count() == 0
 
 
 def test_assembly_round_trip_text_equality(run, tiny_pandas):
@@ -161,8 +222,8 @@ def test_types_table_matches_oracle(run, oracle_triples):
 
 def test_staged_joinlink_equals_staged(spark, run, tiny_paths):
     """Big-KB path: relational-join linking (never driver-collects the
-    candidate table) must produce the identical triple table, including
-    zero-mention sentences flowing through with empty arrays."""
+    candidate table) must produce the fused path's triple and links tables,
+    including zero-mention sentences flowing through with empty arrays."""
     jl = pipeline.run_pipeline(spark, tiny_paths, mode="staged-joinlink")
     a = run["triples"].toPandas()
     b = jl["triples"].toPandas()
@@ -171,8 +232,12 @@ def test_staged_joinlink_equals_staged(spark, run, tiny_paths):
         a.sort_values(cols).reset_index(drop=True),
         b[cols].sort_values(cols).reset_index(drop=True),
     )
+    pd.testing.assert_frame_equal(
+        _sorted_pdf(jl["links"], LINK_COLS), _sorted_pdf(run["links"], LINK_COLS)
+    )
+    assert jl["links"].dtypes == run["links"].dtypes
     # sentence-row parity too (the regroup must not drop mention-free rows)
-    assert jl["linked"].count() == run["linked"].count()
+    assert jl["linked"].count() == run["parsed"].count()
 
 
 def test_ner_only_nel_mode_operator(spark, run, tiny_paths):
@@ -209,12 +274,12 @@ def test_ner_only_nel_mode_operator(spark, run, tiny_paths):
 
 
 def test_link_variants_agree(spark, run, tiny_paths):
-    """broadcast-join linker ≡ dict-broadcast linker ≡ applyInPandas scorer."""
-    _, entity_kb, figer_map = pipeline.load_inputs(spark, tiny_paths)
+    """broadcast-join linker ≡ fused links kernel ≡ applyInPandas scorer."""
+    transcripts, entity_kb, figer_map = pipeline.load_inputs(spark, tiny_paths)
     kb_bc, kb_index_bc, figer_bc = pipeline.build_broadcasts(
         spark, entity_kb, figer_map
     )
-    mention_rows = mentions_op.explode_mentions(run["with_mentions"])
+    mention_rows = fused.mention_rows_fused(transcripts, kb_index_bc)
 
     cols = ["conv_id", "turn_idx", "sent_idx", "mention_id", "url", "figer"]
     a = link.link_mentions_broadcast_join(mention_rows, entity_kb, figer_map)
@@ -223,31 +288,23 @@ def test_link_variants_agree(spark, run, tiny_paths):
     pb = b.select(cols).toPandas().sort_values(cols).reset_index(drop=True)
     pd.testing.assert_frame_equal(pa, pb)
 
-    # and the in-row variant used by the default path
-    in_row = (
-        run["linked"]
-        .select(
-            "conv_id", "turn_idx", "sent_idx",
-            F.posexplode("mentions").alias("mention_id", "m"),
-        )
-        .select("conv_id", "turn_idx", "sent_idx", "mention_id", "m.url", "m.figer")
-    )
-    pc = in_row.toPandas().sort_values(cols).reset_index(drop=True)
+    # and the fused links kernel the default path returns
+    pc = _sorted_pdf(run["links"], cols)
     pd.testing.assert_frame_equal(pa, pc)
 
 
 def test_fused_mention_rows_equal_staged_explode(spark, run, tiny_paths):
     """mention_rows_fused (one Arrow crossing) ≡ explode_mentions over the
-    staged segment→parse→mentions chain, row for row."""
-    from relationextractionpipeline_spark.operators import fused
-
+    joinlink path's segment→parse→mentions UDF chain, row for row."""
     transcripts, entity_kb, figer_map = pipeline.load_inputs(spark, tiny_paths)
     _kb, kbi_bc, _fg = pipeline.build_broadcasts(spark, entity_kb, figer_map)
     cols = ["conv_id", "turn_idx", "sent_idx", "mention_id", "start_tok",
             "end_tok", "surface", "tag", "kind"]
-    a = (
-        mentions_op.explode_mentions(run["with_mentions"])
-        .select(cols).toPandas().sort_values(cols).reset_index(drop=True)
+    a = _sorted_pdf(
+        mentions_op.explode_mentions(
+            mentions_op.detect_mentions(run["parsed"], kbi_bc)
+        ),
+        cols,
     )
     b_ = (
         fused.mention_rows_fused(transcripts, kbi_bc)
@@ -261,10 +318,10 @@ def test_auto_mode_selects_linker_by_kb_size(spark, tiny_paths, monkeypatch):
     relational staged-joinlink beyond the row threshold — same triples
     either way (the two paths are equality-tested; this pins the switch)."""
     auto = pipeline.run_pipeline(spark, tiny_paths, mode="auto")
-    assert "links" not in auto  # fused selection (tiny KB)
+    assert "linked" not in auto  # fused selection (tiny KB)
     monkeypatch.setattr(pipeline, "AUTO_JOINLINK_KB_ROWS", 5)
     auto_big = pipeline.run_pipeline(spark, tiny_paths, mode="auto")
-    assert "links" in auto_big  # joinlink selection
+    assert "linked" in auto_big  # joinlink selection (its UDF chain)
     cols = ["conv_id", "turn_idx", "sent_idx", "rel"]
     a = {tuple(r) for r in auto["triples"].select(cols).collect()}
     b = {tuple(r) for r in auto_big["triples"].select(cols).collect()}

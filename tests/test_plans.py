@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from relationextractionpipeline_spark.operators import link, mentions as mentions_op
+from relationextractionpipeline_spark.operators import fused, link
 from relationextractionpipeline_spark.plans import pipeline
 
 SF = "/root/testdata/sf0.001"
@@ -28,27 +28,28 @@ def test_parquet_filter_and_column_pushdown(spark):
 
 def test_fused_extract_path_has_no_shuffle(spark, tiny_paths):
     run = pipeline.run_pipeline(spark, tiny_paths, mode="fused")
-    plan = _plan(run["triples"])
-    assert "Exchange" not in plan  # scan → mapInPandas → rows: fully narrow
-
-
-def test_staged_extract_path_has_no_shuffle(spark, tiny_paths):
-    run = pipeline.run_pipeline(spark, tiny_paths, mode="staged")
-    plan = _plan(run["triples"])
-    assert "Exchange" not in plan
+    for out in ("triples", "links"):
+        plan = _plan(run[out])
+        # scan → mapInPandas → rows: fully narrow
+        assert "Exchange" not in plan, out
 
 
 def test_staged_path_evaluates_each_udf_once(spark, tiny_paths):
     """Regression gate for the InferFiltersFromGenerate duplication: without
-    the .asNondeterministic() fences the staged plan evaluated the WHOLE
-    segment→parse→link→triples Arrow chain twice (an inferred size()>0 filter
-    cloned every upstream UDF).  Each stage must appear exactly once."""
-    run = pipeline.run_pipeline(spark, tiny_paths, mode="staged")
-    plan = _plan(run["triples"])
+    the .asNondeterministic() fences a UDF-chain plan evaluated the WHOLE
+    segment→parse→mentions→triples Arrow chain twice (an inferred size()>0
+    filter cloned every upstream UDF).  The joinlink path is the one UDF
+    chain left; each of its stages must appear exactly once."""
+    run = pipeline.run_pipeline(spark, tiny_paths, mode="staged-joinlink")
+    # the persisted parse table's plan prints under each of its two
+    # InMemoryTableScans but runs once: count distinct plan lines
+    lines = {l.lstrip(" :+-") for l in _plan(run["triples"]).splitlines()}
     for udf in ("segment_udf", "parse_full_udf", "mentions_udf",
-                "link_udf", "triples_udf"):
-        assert plan.count(udf) == 1, f"{udf} evaluated {plan.count(udf)}×"
-    assert plan.count("ArrowEvalPython") == 5
+                "triples_udf"):
+        n = sum(udf in l for l in lines)
+        assert n == 1, f"{udf} evaluated {n}×"
+    assert sum("ArrowEvalPython" in l for l in lines) == 4
+    spark.catalog.clearCache()
 
 
 def test_joinlink_path_parses_once(spark, tiny_paths):
@@ -62,9 +63,9 @@ def test_joinlink_path_parses_once(spark, tiny_paths):
 
 
 def test_link_broadcast_join_is_broadcast(spark, tiny_paths):
-    run = pipeline.run_pipeline(spark, tiny_paths, mode="staged")
-    _, entity_kb, figer_map = pipeline.load_inputs(spark, tiny_paths)
-    rows = mentions_op.explode_mentions(run["with_mentions"])
+    transcripts, entity_kb, figer_map = pipeline.load_inputs(spark, tiny_paths)
+    kbi_bc = pipeline.build_gazetteer_broadcast(spark, entity_kb)
+    rows = fused.mention_rows_fused(transcripts, kbi_bc)
     out = link.link_mentions_broadcast_join(rows, entity_kb, figer_map)
     plan = _plan(out)
     assert "BroadcastHashJoin" in plan

@@ -1,11 +1,14 @@
-"""Checkpoint/resume: kill-and-resume skips completed stages; byte-identical
-triples; fingerprint invalidation recomputes (SURVEY.md §5.3)."""
+"""Checkpoint/resume: kill-and-resume skips completed groups and stages;
+byte-identical triples; fingerprint invalidation recomputes (SURVEY.md
+§5.3)."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
+from relationextractionpipeline_spark.operators import canonicalize
 from relationextractionpipeline_spark.plans import manifests, pipeline
 from tests.test_pipeline import TRIPLE_KEY, _triple_set
 
@@ -14,46 +17,52 @@ def _events(runner):
     return {(e["stage"], e["action"]) for e in runner.events}
 
 
+def _kill(ck, stage, gi):
+    """Lose one group's output and manifest, as a kill mid-group would."""
+    shutil.rmtree(os.path.join(ck, stage, f"g{gi:05d}"))
+    os.remove(os.path.join(ck, stage, f"g{gi:05d}._manifest.json"))
+
+
 def test_checkpoint_then_resume(spark, tiny_paths, tmp_path):
     ck = str(tmp_path / "ck")
 
     # first (cold) run: everything computed
     r1 = manifests.run_checkpointed(spark, tiny_paths, ck)
     t1 = _triple_set(r1["triples"].toPandas())
-    assert _events(r1["runner"]) == {
-        ("sentences", "computed"), ("linked", "computed"), ("triples", "computed"),
-    }
-    m = r1["runner"].read_manifest("triples")
-    assert m["rows"] == len(t1)
-    assert m["partitions"] and all(p["rows"] >= 0 for p in m["partitions"])
+    assert _events(r1["runner"]) == {("triples", "computed")}
+    groups = sorted(e["group"] for e in r1["runner"].events)
+    ms = [
+        json.load(open(os.path.join(ck, "triples", f"g{gi:05d}._manifest.json")))
+        for gi in groups
+    ]
+    assert sum(m["rows"] for m in ms) == len(t1)
+    assert all(m["partitions"] and all(p["rows"] >= 0 for p in m["partitions"])
+               for m in ms)
 
-    # simulate a kill after stage 2: drop the triples checkpoint only
-    shutil.rmtree(os.path.join(ck, "triples"))
-    os.remove(os.path.join(ck, "triples._manifest.json"))
-
+    # simulate a kill while one group was in flight: only it recomputes
+    _kill(ck, "triples", groups[0])
     r2 = manifests.run_checkpointed(spark, tiny_paths, ck)
-    assert _events(r2["runner"]) == {
-        ("sentences", "resumed"), ("linked", "resumed"), ("triples", "computed"),
-    }
+    acts = {(e["group"], e["action"]) for e in r2["runner"].events}
+    assert acts == {(gi, "computed" if gi == groups[0] else "resumed")
+                    for gi in groups}
     assert _triple_set(r2["triples"].toPandas()) == t1
 
     # full resume: nothing recomputed
     r3 = manifests.run_checkpointed(spark, tiny_paths, ck)
-    assert _events(r3["runner"]) == {
-        ("sentences", "resumed"), ("linked", "resumed"), ("triples", "resumed"),
-    }
+    assert _events(r3["runner"]) == {("triples", "resumed")}
     assert _triple_set(r3["triples"].toPandas()) == t1
 
 
-def test_checkpointed_graph_tail_resume(spark, tiny_paths, tmp_path):
+def test_checkpointed_graph_tail_resume(spark, tiny_paths, tmp_path, monkeypatch):
     """Graph stages (entities/edges/predicates) under manifest control: a
     kill during the graph tail recomputes only the dead stage; a full
     resume never re-runs the iterative CC; outputs match the direct
     materialize_graph path."""
     ck = str(tmp_path / "ck_graph")
     r1 = manifests.run_checkpointed(spark, tiny_paths, ck, graph=True)
-    assert _events(r1["runner"]) >= {
-        ("entities", "computed"), ("edges", "computed"), ("predicates", "computed"),
+    assert _events(r1["runner"]) == {
+        (s, "computed")
+        for s in ("triples", "links", "entities", "edges", "predicates")
     }
     ents1 = {r["canonical_id"] for r in r1["entities"].collect()}
     edges1 = r1["edges"].count()
@@ -61,11 +70,12 @@ def test_checkpointed_graph_tail_resume(spark, tiny_paths, tmp_path):
     # direct path equality — including the EDGES SCHEMA: the checkpointed
     # tail must carry the predicate rewrite (pred_canonical/pred_id), not a
     # schema-diverged edges table missing the predicates join
-    staged = pipeline.run_pipeline(spark, tiny_paths, mode="staged")
-    g = pipeline.materialize_graph(staged)
+    direct = pipeline.run_pipeline(spark, tiny_paths, mode="fused")
+    g = pipeline.materialize_graph(direct)
     assert {r["canonical_id"] for r in g["entities"].collect()} == ents1
     assert g["edges"].count() == edges1
     assert r1["edges"].columns == g["edges"].columns
+    assert r1["edges"].dtypes == g["edges"].dtypes
     assert {"pred_canonical", "pred_id"} <= set(r1["edges"].columns)
     pe_ck = {
         (r["pred"], r["pred_canonical"])
@@ -78,21 +88,29 @@ def test_checkpointed_graph_tail_resume(spark, tiny_paths, tmp_path):
     assert pe_ck == pe_direct
 
     # kill during the graph tail: drop edges only
-    shutil.rmtree(os.path.join(ck, "edges"))
-    os.remove(os.path.join(ck, "edges._manifest.json"))
+    _kill(ck, "edges", 0)
     r2 = manifests.run_checkpointed(spark, tiny_paths, ck, graph=True)
     ev = _events(r2["runner"])
     assert ("edges", "computed") in ev
-    assert ("entities", "resumed") in ev and ("triples", "resumed") in ev
+    assert ev - {("edges", "computed")} == {
+        (s, "resumed") for s in ("triples", "links", "entities", "predicates")
+    }
     assert r2["edges"].count() == edges1
 
     # full resume: every stage (incl. graph) resumed, CC never re-ran
+    calls = []
+    real = canonicalize.connected_components
+    monkeypatch.setattr(
+        canonicalize, "connected_components",
+        lambda *a, **kw: calls.append(1) or real(*a, **kw),
+    )
     r3 = manifests.run_checkpointed(spark, tiny_paths, ck, graph=True)
     assert _events(r3["runner"]) == {
         (s, "resumed")
-        for s in ("sentences", "linked", "triples",
-                  "entities", "edges", "predicates")
+        for s in ("triples", "links", "entities", "edges", "predicates")
     }
+    assert r3["edges"].count() == edges1
+    assert not calls
 
 
 def test_checkpointed_matches_direct(spark, tiny_paths, tmp_path):
@@ -106,8 +124,7 @@ def test_checkpointed_matches_direct(spark, tiny_paths, tmp_path):
 
 def test_partition_level_resume(spark, tiny_paths, tmp_path):
     """Mid-stage kill: only the group that was in flight recomputes; finished
-    groups are skipped (the partition-level resume the stage-level runner
-    can't do)."""
+    groups are skipped."""
     ck = str(tmp_path / "ckp")
     # shard the tiny transcripts into 3 files so groups exist
     import pandas as _pd
@@ -183,9 +200,7 @@ def test_fingerprint_invalidation(spark, tiny_paths, tmp_path):
     for p in targets:
         os.utime(p, (1, 1))
     r = manifests.run_checkpointed(spark, tiny_paths, ck)
-    assert _events(r["runner"]) == {
-        ("sentences", "computed"), ("linked", "computed"), ("triples", "computed"),
-    }
+    assert _events(r["runner"]) == {("triples", "computed")}
 
 
 def test_partition_resume_append_recomputes_only_gained_buckets(

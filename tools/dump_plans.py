@@ -16,7 +16,7 @@ import __spark_entry__ as entrymod  # noqa: E402
 from relationextractionpipeline_spark.session import get_spark  # noqa: E402
 from relationextractionpipeline_spark.sources import testgen  # noqa: E402
 from relationextractionpipeline_spark.plans import pipeline  # noqa: E402
-from relationextractionpipeline_spark.operators import link, mentions as mentions_op  # noqa: E402
+from relationextractionpipeline_spark.operators import fused, link  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
@@ -49,9 +49,11 @@ def main() -> None:
     spark = get_spark(master="local[4]", shuffle_partitions=8)
     paths = testgen.materialize("tiny")
     run = pipeline.run_pipeline(spark, paths, mode="fused")
-    staged = pipeline.run_pipeline(spark, paths, mode="staged")
-    _, entity_kb, figer_map = pipeline.load_inputs(spark, paths)
-    mention_rows = mentions_op.explode_mentions(staged["with_mentions"])
+    joinlink = pipeline.run_pipeline(spark, paths, mode="staged-joinlink")
+    transcripts, entity_kb, figer_map = pipeline.load_inputs(spark, paths)
+    mention_rows = fused.mention_rows_fused(
+        transcripts, pipeline.build_gazetteer_broadcast(spark, entity_kb)
+    )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     pushdown = docs.where(F.col("n_chars") > 100).select("doc_id", "lang")
@@ -59,9 +61,12 @@ def main() -> None:
     sections = [
         ("Fused extract path (turns → triples) — must contain no Exchange",
          run["triples"]),
-        ("Staged extract path — each Arrow UDF stage appears EXACTLY once "
-         "(the asNondeterministic fences stop InferFiltersFromGenerate from "
-         "cloning the chain into inferred filters)", staged["triples"]),
+        ("Fused links kernel (turns → linked mention rows) — must contain "
+         "no Exchange", run["links"]),
+        ("Joinlink extract path (the one remaining UDF chain) — each Arrow "
+         "UDF stage appears EXACTLY once (the asNondeterministic fences stop "
+         "InferFiltersFromGenerate from cloning the chain into inferred "
+         "filters)", joinlink["triples"]),
         ("Conversation assembly (W2) — exactly one hash-partition Exchange, "
          "partial+final aggregate", run["assembled"]),
         ("Linker broadcast joins (J3) — BroadcastHashJoin, never SortMerge",
