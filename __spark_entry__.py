@@ -689,7 +689,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from relationextractionpipeline_spark.operators import canonicalize
 
         if _small_scale(sf_dir):
+            # the shared und_cte oracle reads the sequential triples and
+            # the key map: materialize both here, not in query order
             oracle_mat.entity_clusters(_scale_for(sf_dir))
+            oracle_mat.oracle_triples(_scale_for(sf_dir))
         run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
         entities, edges = canonicalize.canonicalize(run["triples"], run["links"])
         ed = (

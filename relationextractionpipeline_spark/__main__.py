@@ -57,8 +57,7 @@ def parse_args(argv):
                    choices=["merged", "ner_only"],
                    help="mention detection: merged (NER+common nouns, the "
                         "main path) or ner_only (ner_nel.py alternative: "
-                        "NEs only, adjacent spans fused); mode=checkpointed "
-                        "always runs merged")
+                        "NEs only, adjacent spans fused)")
     p.add_argument("--cpus", type=int, default=os.cpu_count())
     p.add_argument("--master", default=None)
     p.add_argument("--table-format", default="parquet",
@@ -134,7 +133,8 @@ def main(argv=None) -> int:
     if args.mode == "checkpointed":
         ck = args.checkpoint_dir or os.path.join(args.out, "_checkpoints")
         run = manifests.run_checkpointed(
-            spark, paths, ck, graph=args.graph, group_size=args.group_size
+            spark, paths, ck, graph=args.graph, group_size=args.group_size,
+            nel_mode=args.nel_mode,
         )
     else:
         run = pipeline.run_pipeline(

@@ -11,15 +11,27 @@ Cluster evidence, in order of strength:
 2. minhash-LSH near-duplicate surface strings, verified by exact shingle
    Jaccard to kill LSH false positives (notInWiki long tail).
 
-Connected components is iterative min-label propagation over the undirected
-candidate-pair graph with ``localCheckpoint()`` per iteration to cut lineage
-(no GraphFrames dependency).  Alias/URL clusters are stars, so convergence is
-2-3 iterations; the iteration cap guards pathological chains.
+Two plans compute the same (node, component) labels, chosen by the size of
+the distinct key table (``_KEY_TABLE_DRIVER_MAX_ROWS``):
+
+* dimension-sized tables (the usual case: distinct entity references and
+  predicate strings) are collected once and clustered on the driver by
+  ``_driver_components`` — minhash, LSH banding with the same slices and
+  bucket cap as ``sketches.lsh_candidate_pairs``, exact Jaccard, same-URL
+  stars, min-label union-find — with no further Spark job;
+* larger tables run the distributed plan: LSH candidate pairs joined and
+  verified by a pandas UDF, then ``connected_components`` — alternating
+  large-star/small-star rounds with ``localCheckpoint()`` per round to cut
+  lineage (no GraphFrames dependency), or a driver union-find once the
+  verified edge list is at most ``_CC_DRIVER_MAX_EDGES``.
+
+Either way the canonical id of a cluster is its min key, and the entities,
+edges and predicate-map joins downstream are the same.
 """
 
 from __future__ import annotations
 
-from typing import NamedTuple, Optional, Tuple
+from typing import Dict, Iterable, NamedTuple, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
@@ -66,14 +78,12 @@ def connected_components(
 _CC_DRIVER_MAX_EDGES = 2_000_000
 
 
-def _cc_driver_labels(base: DataFrame) -> DataFrame:
-    """(node, component) via sequential union-find over a collected edge
-    list — exactly the star loop's fixpoint (component = min node id in the
-    component; nodes = every id appearing in an edge), computed driver-side.
+def _union_find_labels(edges: Iterable[Tuple]) -> Dict:
+    """node → component for every node of an edge list, by sequential
+    union-find: exactly the star loop's fixpoint (component = min node id
+    in the component; nodes = every id appearing in an edge).
     Deterministic: label assignment is order-independent (min over the
     component)."""
-    spark = base.sparkSession
-    pdf = base.toPandas()
     parent: dict = {}
 
     def find(x):
@@ -84,24 +94,43 @@ def _cc_driver_labels(base: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for u, v in zip(pdf["u"].tolist(), pdf["v"].tolist()):
+    for u, v in edges:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
         ru, rv = find(u), find(v)
         if ru != rv:
             # union by min: the smaller id becomes the root, so every
             # root IS its component's minimum at all times
             lo, hi = (ru, rv) if ru < rv else (rv, ru)
             parent[hi] = lo
-    nodes = set(pdf["u"].tolist()) | set(pdf["v"].tolist())
-    out = pd.DataFrame(
-        {"node": list(nodes)}
-    )
-    out["component"] = [find(n) for n in out["node"]]
-    out = out.sort_values("node").reset_index(drop=True)
+    return {n: find(n) for n in list(parent)}
+
+
+def _labels_frame(spark, labels: Dict, dtype: T.DataType) -> DataFrame:
+    """(node, component) rows of ``labels``, sorted by node, as a local
+    DataFrame with both columns of the node type."""
+    out = pd.DataFrame(sorted(labels.items()), columns=["node", "component"])
     schema = T.StructType([
-        T.StructField("node", base.schema["u"].dataType),
-        T.StructField("component", base.schema["u"].dataType),
+        T.StructField("node", dtype),
+        T.StructField("component", dtype),
     ])
     return spark.createDataFrame(out, schema=schema)
+
+
+def _cc_driver_labels(base: DataFrame) -> DataFrame:
+    """(node, component) via :func:`_union_find_labels` over a collected
+    edge list, computed driver-side."""
+    u_type, v_type = base.schema["u"].dataType, base.schema["v"].dataType
+    if u_type != v_type:
+        # node and component share one column type; mixed endpoint types
+        # would mis-cast one side
+        raise TypeError(
+            f"connected_components: src is {u_type.simpleString()} but dst "
+            f"is {v_type.simpleString()}; cast both to one type"
+        )
+    pdf = base.toPandas()
+    labels = _union_find_labels(zip(pdf["u"].tolist(), pdf["v"].tolist()))
+    return _labels_frame(base.sparkSession, labels, u_type)
 
 
 def _connected_components_star(
@@ -327,6 +356,96 @@ def candidate_pairs_for_entities(
     return url_star.union(near).distinct()
 
 
+# Driver-side canonicalization bound, in key-table rows: a distinct key
+# table (entities: (ent_key, surface, url); predicates: pred) of at most
+# this many rows is collected once and clustered by _driver_components; a
+# larger one takes the distributed LSH → connected_components plan.  At
+# dimension sizes that plan is ~12 Spark jobs per call, each paying fixed
+# scheduling, plan-compilation and Python-worker start-up cost whatever its
+# row count.  Crossover, wall seconds driver vs distributed on local[4]
+# (4-core VM, warm JVM) over synthetic entity key tables built from 15
+# syllables, so near-dup candidates are dense and the driver's
+# single-threaded pair work grows fastest: 1.1 vs 4.3 at 10k rows, 7.5 vs
+# 10.4 at 50k, 22.8 vs 22.7 at 100k, 78 vs 64 at 200k.  The bound sits
+# below the ~100k tie; the collect it allows is a few MB.  0 disables the
+# driver path (tests set it to force the distributed plan, as
+# tests/test_cc_driver.py does for _CC_DRIVER_MAX_EDGES).
+_KEY_TABLE_DRIVER_MAX_ROWS = 50_000
+
+
+def _driver_components(
+    keys: DataFrame,
+    surface_col: str,
+    url_col: Optional[str],
+    n_hashes: int,
+    bands: int,
+    shingle_k: int,
+    jaccard_threshold: float,
+) -> Optional[DataFrame]:
+    """(node, component) for a distinct key table clustered on the driver,
+    or ``None`` when the table has more than ``_KEY_TABLE_DRIVER_MAX_ROWS``
+    rows (the caller then runs the distributed plan).
+
+    The same evidence and labels as :func:`candidate_pairs_for_entities`
+    followed by :func:`connected_components`: minhash over char shingles
+    of ``surface_col`` per distinct (ent_key, surface) row; LSH banding
+    (:func:`sketches.lsh_candidate_pairs_local`); exact Jaccard over every
+    surface pair of a candidate key pair; same-``url_col`` star edges to
+    the min key when ``url_col`` is given; min-label union-find.  Nulls as
+    in the Spark plan: a null surface sketches as ``""``, a null key sizes
+    buckets but never pairs, and a null url is one group."""
+    rows = (
+        keys.select(
+            "ent_key", surface_col, *([url_col] if url_col else [])
+        )
+        .limit(_KEY_TABLE_DRIVER_MAX_ROWS + 1)
+        .collect()
+    )
+    if len(rows) > _KEY_TABLE_DRIVER_MAX_ROWS:
+        return None
+    surf_rows = {(r[0], r[1]) for r in rows}
+    sig_memo: Dict[str, list] = {}
+    shingle_memo: Dict[str, set] = {}
+    surfaces: Dict = {}
+    for key, surface in surf_rows:
+        text = surface or ""
+        if text not in sig_memo:
+            shingles = sketches.char_shingles(text, shingle_k)
+            shingle_memo[text] = set(shingles)
+            sig_memo[text] = sketches.minhash_signature(shingles, n_hashes)
+        surfaces.setdefault(key, []).append(text)
+    cand = sketches.lsh_candidate_pairs_local(
+        [k for k, _s in surf_rows],
+        [sig_memo[s or ""] for _k, s in surf_rows],
+        bands=bands,
+    )
+
+    def similar(a: str, b: str) -> bool:
+        # sketches.jaccard over the memoized shingle sets, without copying
+        sa, sb = shingle_memo[a], shingle_memo[b]
+        inter = len(sa & sb)
+        return inter / (len(sa) + len(sb) - inter) >= jaccard_threshold
+
+    edges = [
+        (a, b)
+        for a, b in cand
+        if any(similar(x, y) for x in surfaces[a] for y in surfaces[b])
+    ]
+    if url_col:
+        by_url: Dict = {}
+        for key, _surface, url in rows:
+            if key is not None:
+                by_url.setdefault(url, set()).add(key)
+        for ks in by_url.values():
+            root = min(ks)
+            edges.extend((root, k) for k in ks if k != root)
+    return _labels_frame(
+        keys.sparkSession,
+        _union_find_labels(edges),
+        keys.schema["ent_key"].dataType,
+    )
+
+
 def entity_refs(links: DataFrame) -> DataFrame:
     """Per-mention entity reference rows with the P11 cluster key.
 
@@ -360,23 +479,31 @@ def canonicalize_predicates(
     form is the cluster's min string; singletons map to themselves.
     """
     preds = triples.select("pred").distinct().withColumnRenamed("pred", "ent_key")
-    # tracked persist — caller releases (operators/cache.py)
-    sigs = cache.track(
-        sketches.with_minhash(
-            preds, "ent_key", n_hashes=n_hashes, shingle_k=shingle_k, mode="char"
+    comps = _driver_components(
+        preds, "ent_key", None, n_hashes, bands, shingle_k, jaccard_threshold
+    )
+    if comps is None:
+        # tracked persist — caller releases (operators/cache.py)
+        sigs = cache.track(
+            sketches.with_minhash(
+                preds, "ent_key", n_hashes=n_hashes, shingle_k=shingle_k,
+                mode="char",
+            )
         )
-    )
-    cand = sketches.lsh_candidate_pairs(sigs, "ent_key", "minhash", bands=bands)
-    # predicates ARE their own ids here: cand's id_a/id_b come from sigs
-    # over preds itself, so no join-back is needed before verification
-    # (merge_predicate_batch applies jac directly the same way)
-    jac = _jaccard_udf(shingle_k)
-    near = (
-        cand.withColumn("j", jac("id_a", "id_b"))
-        .where(F.col("j") >= jaccard_threshold)
-        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
-    comps = connected_components(near)
+        cand = sketches.lsh_candidate_pairs(
+            sigs, "ent_key", "minhash", bands=bands
+        )
+        # predicates ARE their own ids here: cand's id_a/id_b come from
+        # sigs over preds itself, so no join-back is needed before
+        # verification (merge_predicate_batch applies jac directly the
+        # same way)
+        jac = _jaccard_udf(shingle_k)
+        near = (
+            cand.withColumn("j", jac("id_a", "id_b"))
+            .where(F.col("j") >= jaccard_threshold)
+            .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        )
+        comps = connected_components(near)
     return (
         preds.join(comps, preds["ent_key"] == comps["node"], "left")
         .select(
@@ -798,13 +925,23 @@ def canonicalize(
     Returns:
       entities(entity_id, canonical_id, ent_key, surfaces, urls, types, n_mentions)
       edges = triples + (subj_id, obj_id) canonical ids.
+
+    Clustering runs eagerly (Spark actions): one collect of the distinct
+    key table, plus the distributed LSH/CC plan when that table is larger
+    than ``_KEY_TABLE_DRIVER_MAX_ROWS``.
     """
     # refs feeds candidate generation, the entities rollup and the key
     # map — checkpoint so the UDF pipeline upstream runs once
     refs = cache.checkpoint(entity_refs(links))
     ents = refs.select("ent_key", "surface", "url").distinct()
-    pair_edges = candidate_pairs_for_entities(ents)
-    comps = connected_components(pair_edges)
+    # the batch defaults of candidate_pairs_for_entities, passed to both
+    # plans so they cannot drift apart
+    params = dict(n_hashes=32, bands=8, shingle_k=3, jaccard_threshold=0.7)
+    comps = _driver_components(ents, "surface", "url", **params)
+    if comps is None:
+        comps = connected_components(
+            candidate_pairs_for_entities(ents, **params)
+        )
     # singletons (no edges) keep their own key as component
     keyed = (
         ents.select("ent_key")

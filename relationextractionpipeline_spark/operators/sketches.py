@@ -27,6 +27,7 @@ at production scale the signature table is a materialized artifact anyway.
 
 from __future__ import annotations
 
+import itertools
 import zlib
 from typing import List
 
@@ -267,6 +268,36 @@ def lsh_candidate_pairs_incremental(
         )
         .distinct()
     )
+
+
+def lsh_candidate_pairs_local(
+    ids: List, sigs: List[List[int]], bands: int = 16, max_bucket: int = 1000
+) -> set:
+    """Pure-Python twin of :func:`lsh_candidate_pairs` over rows held on
+    the driver: ``{(id_a, id_b)}`` with id_a < id_b.
+
+    Same banding policy: band ``i`` is the signature slice
+    ``[i*w, (i+1)*w)`` with ``w = len(sig) // bands``, a bucket is
+    (band, slice), buckets holding more than ``max_bucket`` rows are
+    dropped, and null ids count towards a bucket's size but never pair.
+    The bucket key is the slice itself rather than its xxhash64, so the two
+    differ only on a 64-bit hash collision."""
+    buckets: dict = {}
+    for id_, sig in zip(ids, sigs):
+        if len(sig) < bands:
+            raise ValueError(
+                f"bands={bands} exceeds the minhash signature length — "
+                "rebuild signatures with n_hashes >= bands"
+            )
+        w = len(sig) // bands
+        for b in range(bands):
+            buckets.setdefault((b, tuple(sig[b * w : (b + 1) * w])), []).append(id_)
+    pairs = set()
+    for members in buckets.values():
+        if 1 < len(members) <= max_bucket:
+            keys = sorted({m for m in members if m is not None})
+            pairs.update(itertools.combinations(keys, 2))
+    return pairs
 
 
 def _band_hashes_col(sig_col: str, bands: int):

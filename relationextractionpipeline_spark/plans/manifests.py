@@ -8,8 +8,8 @@ worker's group.  Here the unit of recovery is a GROUP of input files
 manifest carrying
 
 * an **input fingerprint** (the group's files + sizes + mtimes, the
-  dimension tables, the stage-code version) so a resume never silently
-  reuses stale output;
+  dimension tables, the run's options, the stage-code version) so a
+  resume never silently reuses stale output;
 * **per-partition row counters** (lineage/observability: which partition
   produced how many rows);
 * total rows and output path.
@@ -245,10 +245,15 @@ def run_checkpointed(
     checkpoint_dir: str,
     graph: bool = False,
     group_size: int = 8,
+    nel_mode: str = "merged",
 ) -> Dict[str, DataFrame]:
     """The checkpointed pipeline: fused turns→triples with partition-level
     resume (input transcript files grouped; each group is one resumable
     unit), optionally + the graph tail.
+
+    ``nel_mode`` ('merged' | 'ner_only') selects the mention detector of
+    both kernels, as in ``run_pipeline``; it is part of the shared
+    fingerprint, so a resume never reuses output made under the other mode.
 
     ``graph=True`` adds per-group ``links`` (the fused links kernel) and
     three whole-input stages: ``predicates``, ``entities``, ``edges`` — a
@@ -265,10 +270,12 @@ def run_checkpointed(
     )
     from relationextractionpipeline_spark.plans import pipeline as pl
 
-    # dims-only shared fingerprint: the transcripts are fingerprinted
-    # PER GROUP inside stage(), so appending corpus files recomputes only
-    # the groups that gained files
-    fp = input_fingerprint([paths["entity_kb"], paths["figer_map"]])
+    # dims-and-options shared fingerprint: the transcripts are
+    # fingerprinted PER GROUP inside stage(), so appending corpus files
+    # recomputes only the groups that gained files
+    fp = input_fingerprint(
+        [paths["entity_kb"], paths["figer_map"]], extra=f"nel_mode={nel_mode}"
+    )
     runner = PartitionedStageRunner(spark, checkpoint_dir)
     _transcripts, entity_kb, figer_map = pl.load_inputs(spark, paths)
     bcs = pl.build_broadcasts(spark, entity_kb, figer_map)
@@ -279,7 +286,9 @@ def run_checkpointed(
             name,
             fp,
             files,
-            lambda fs: kernel(spark.read.parquet(*fs), *bcs),
+            lambda fs: kernel(
+                spark.read.parquet(*fs), *bcs, nel_mode=nel_mode
+            ),
             group_size=group_size,
         )
 

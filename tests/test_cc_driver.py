@@ -1,9 +1,12 @@
 """The bounded driver-side union-find fast path of connected_components must
 return exactly what the distributed star loop returns — same (node,
 component) rows, component = min id in the component — on chains, stars,
-singleton-free edge sets and random graphs."""
+singleton-free edge sets and random graphs; and it must refuse an edge
+list whose two endpoint columns differ in type."""
 
 import random
+
+import pytest
 
 from relationextractionpipeline_spark.operators import cache, canonicalize
 
@@ -60,3 +63,10 @@ def test_string_nodes(spark):
     assert fast == slow
     comp = dict(fast)
     assert comp["c"] == "a" and comp["y"] == "x"
+
+
+def test_mixed_endpoint_types_are_rejected(spark):
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "src long, dst string")
+    with pytest.raises(TypeError, match="src is bigint but dst is string"):
+        canonicalize.connected_components(df, "src", "dst")
+    cache.release_all(checkpoints=True)

@@ -56,7 +56,7 @@ def test_checkpoint_then_resume(spark, tiny_paths, tmp_path):
 def test_checkpointed_graph_tail_resume(spark, tiny_paths, tmp_path, monkeypatch):
     """Graph stages (entities/edges/predicates) under manifest control: a
     kill during the graph tail recomputes only the dead stage; a full
-    resume never re-runs the iterative CC; outputs match the direct
+    resume never re-runs the clustering; outputs match the direct
     materialize_graph path."""
     ck = str(tmp_path / "ck_graph")
     r1 = manifests.run_checkpointed(spark, tiny_paths, ck, graph=True)
@@ -97,13 +97,17 @@ def test_checkpointed_graph_tail_resume(spark, tiny_paths, tmp_path, monkeypatch
     }
     assert r2["edges"].count() == edges1
 
-    # full resume: every stage (incl. graph) resumed, CC never re-ran
+    # full resume: every stage (incl. graph) resumed, and neither
+    # clustering entry point (driver core or distributed CC) ran
     calls = []
-    real = canonicalize.connected_components
-    monkeypatch.setattr(
-        canonicalize, "connected_components",
-        lambda *a, **kw: calls.append(1) or real(*a, **kw),
-    )
+    for name in ("_driver_components", "connected_components"):
+        real = getattr(canonicalize, name)
+        monkeypatch.setattr(
+            canonicalize, name,
+            lambda *a, _real=real, _name=name, **kw: (
+                calls.append(_name) or _real(*a, **kw)
+            ),
+        )
     r3 = manifests.run_checkpointed(spark, tiny_paths, ck, graph=True)
     assert _events(r3["runner"]) == {
         (s, "resumed")
@@ -111,6 +115,30 @@ def test_checkpointed_graph_tail_resume(spark, tiny_paths, tmp_path, monkeypatch
     }
     assert r3["edges"].count() == edges1
     assert not calls
+
+
+def test_checkpointed_nel_mode_reaches_kernels_and_fingerprint(
+    spark, tiny_paths, tmp_path
+):
+    """nel_mode='ner_only' reaches both checkpointed kernels, and a
+    checkpoint made under one mode is never resumed under the other."""
+    ck = str(tmp_path / "ck_nel")
+    r1 = manifests.run_checkpointed(
+        spark, tiny_paths, ck, graph=True, nel_mode="ner_only"
+    )
+    ner = pipeline.run_pipeline(spark, tiny_paths, mode="fused", nel_mode="ner_only")
+    t_ner = _triple_set(r1["triples"].toPandas())
+    assert t_ner == _triple_set(ner["triples"].toPandas())
+    assert {r["kind"] for r in r1["links"].select("kind").distinct().collect()} == {
+        "ner"
+    }
+
+    r2 = manifests.run_checkpointed(spark, tiny_paths, ck)  # merged
+    assert _events(r2["runner"]) == {("triples", "computed")}
+    merged = pipeline.run_pipeline(spark, tiny_paths, mode="fused")
+    t_merged = _triple_set(r2["triples"].toPandas())
+    assert t_merged == _triple_set(merged["triples"].toPandas())
+    assert t_merged != t_ner
 
 
 def test_checkpointed_matches_direct(spark, tiny_paths, tmp_path):

@@ -63,6 +63,10 @@ def main() -> None:
          run["triples"]),
         ("Fused links kernel (turns → linked mention rows) — must contain "
          "no Exchange", run["links"]),
+        ("Canonical edges (materialize_graph) — dimension-sized key tables "
+         "cluster on the driver, so the entity key map and the predicate map "
+         "join in as LocalTableScan (no LSH or connected-components stages)",
+         pipeline.materialize_graph(run)["edges"]),
         ("Joinlink extract path (the one remaining UDF chain) — each Arrow "
          "UDF stage appears EXACTLY once (the asNondeterministic fences stop "
          "InferFiltersFromGenerate from cloning the chain into inferred "
