@@ -11,8 +11,12 @@ manifest carrying
   dimension tables, the run's options, the stage-code version) so a
   resume never silently reuses stale output;
 * **per-partition row counters** (lineage/observability: which partition
-  produced how many rows);
+  produced how many rows), read from the parquet footers of the group's
+  ``part-NNNNN`` files — no read-back scan, no count job;
 * total rows and output path.
+
+A manifest that is missing, unreadable (torn write) or names no
+``_SUCCESS`` output marks its group as pending: it recomputes.
 
 A valid manifest (fingerprint match + parquet ``_SUCCESS``) short-circuits
 to a scan of the materialized output, so a killed run recomputes only the
@@ -25,15 +29,23 @@ same manifest format.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
+import re
 import time
 from typing import Callable, Dict, List, Optional
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-STAGE_CODE_VERSION = "1"  # bump to invalidate all checkpoints on rule changes
+# bump to invalidate all checkpoints on rule or format changes ("2": group
+# outputs no longer carry a _pid column)
+STAGE_CODE_VERSION = "2"
+
+# Spark's data-file name: part-<partition id>-<job uuid>[-c000].<codec>.parquet
+_PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
 
 
 def input_fingerprint(paths: List[str], extra: str = "") -> str:
@@ -71,12 +83,15 @@ class PartitionedStageRunner:
     restarts a whole *stage* for every batch in a worker's group
     (``main.py:85-94``).  Stages whose every row depends on
     the whole input (the graph tail) run as ONE group over all files
-    (``whole``) — same manifest format, same write/count/publish path.
+    (``whole``) — same manifest format, same write/publish path.
 
-    Scale note: each group job is a normal distributed job over that group's
-    input splits (files ≫ groups ≫ 1), so executors stay busy within a
-    group; ``group_size`` trades resume granularity against per-job overhead.
-    At 100 TB you'd size groups to a few minutes of work each.
+    Scale note: ``run_checkpointed`` sizes each group's scan to its bytes
+    (``session.sized``): a group smaller than ``cores ×
+    MIN_SPLIT_BYTES`` runs as few tasks (one, for a typical small group),
+    and a larger one is a normal distributed job over its input splits, so
+    executors stay busy within a group; ``group_size`` trades resume
+    granularity against per-job overhead.  At 100 TB you'd size groups to a
+    few minutes of work each.
     """
 
     def __init__(self, spark: SparkSession, checkpoint_dir: str):
@@ -118,11 +133,27 @@ class PartitionedStageRunner:
         return groups
 
     def _manifest(self, name: str, gi: int) -> Optional[Dict]:
-        mpath = self._group_manifest(name, gi)
-        if not os.path.exists(mpath):
+        """The group's manifest, or None when it is missing or unreadable
+        (a torn write): either way the group recomputes."""
+        try:
+            with open(self._group_manifest(name, gi)) as f:
+                return json.load(f)
+        except (OSError, ValueError):
             return None
-        with open(mpath) as f:
-            return json.load(f)
+
+    @staticmethod
+    def _partition_counts(gout: str) -> List[Dict]:
+        """Rows per write partition, from the footers of the group's data
+        files (the partition id is in each file's name).  Partitions that
+        wrote no rows are left out."""
+        counts: Dict[int, int] = {}
+        for f in os.listdir(gout):
+            m = _PART_FILE.match(f)
+            if m:
+                pid = int(m.group(1))
+                rows = pq.read_metadata(os.path.join(gout, f)).num_rows
+                counts[pid] = counts.get(pid, 0) + rows
+        return [{"pid": p, "rows": r} for p, r in sorted(counts.items()) if r]
 
     def is_complete(
         self, name: str, gi: int, files: List[str], fingerprint: str
@@ -155,15 +186,8 @@ class PartitionedStageRunner:
             return gout
         os.makedirs(self._stage_dir(name), exist_ok=True)
         t0 = time.time()
-        df = build(files).withColumn("_pid", F.spark_partition_id())
-        df.write.mode("overwrite").parquet(gout)
-        part_counts = [
-            {"pid": int(r["_pid"]), "rows": int(r["cnt"])}
-            for r in self.spark.read.parquet(gout)
-            .groupBy("_pid")
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        ]
+        build(files).write.mode("overwrite").parquet(gout)
+        part_counts = self._partition_counts(gout)
         manifest = {
             "stage": name,
             "group": gi,
@@ -171,7 +195,7 @@ class PartitionedStageRunner:
             "fingerprint": input_fingerprint(files, extra=fingerprint),
             "output": gout,
             "rows": sum(p["rows"] for p in part_counts),
-            "partitions": sorted(part_counts, key=lambda p: p["pid"]),
+            "partitions": part_counts,
             "wall_sec": round(time.time() - t0, 3),
         }
         mpath = self._group_manifest(name, gi)
@@ -181,10 +205,6 @@ class PartitionedStageRunner:
         os.replace(tmp, mpath)  # atomic publish AFTER the data _SUCCESS
         self.events.append({"stage": name, "group": gi, "action": "computed"})
         return gout
-
-    def _scan(self, outs: List[str]) -> DataFrame:
-        # _pid is manifest bookkeeping, not stage schema — never leak it
-        return self.spark.read.parquet(*outs).drop("_pid")
 
     def stage(
         self,
@@ -204,11 +224,11 @@ class PartitionedStageRunner:
         dimension-table change still invalidates everything — correct:
         every group's output depends on the dims.)"""
         groups = self.plan_groups(input_files, group_size)
-        return self._scan([
+        return self.spark.read.parquet(*(
             self._group(name, gi, files, fingerprint, build)
             for gi, files in enumerate(groups)
             if files  # empty hash bucket — stable index, nothing to run
-        ])
+        ))
 
     def whole(
         self,
@@ -221,9 +241,9 @@ class PartitionedStageRunner:
         (index 0) over all of them (``input_files`` sorted, as
         ``list_parquet_files`` returns them), so touching any file
         recomputes it."""
-        return self._scan([
+        return self.spark.read.parquet(
             self._group(name, 0, input_files, fingerprint, lambda _fs: build())
-        ])
+        )
 
 
 def list_parquet_files(path: str) -> List[str]:
@@ -269,6 +289,7 @@ def run_checkpointed(
         fused,
     )
     from relationextractionpipeline_spark.plans import pipeline as pl
+    from relationextractionpipeline_spark.session import sized
 
     # dims-and-options shared fingerprint: the transcripts are
     # fingerprinted PER GROUP inside stage(), so appending corpus files
@@ -277,17 +298,27 @@ def run_checkpointed(
         [paths["entity_kb"], paths["figer_map"]], extra=f"nel_mode={nel_mode}"
     )
     runner = PartitionedStageRunner(spark, checkpoint_dir)
-    _transcripts, entity_kb, figer_map = pl.load_inputs(spark, paths)
-    bcs = pl.build_broadcasts(spark, entity_kb, figer_map)
     files = list_parquet_files(paths["transcripts"])
 
+    @functools.cache
+    def broadcasts():
+        # built on the first pending group: a full resume runs no job here
+        return pl.build_broadcasts(
+            spark,
+            spark.read.parquet(paths["entity_kb"]),
+            spark.read.parquet(paths["figer_map"]),
+        )
+
     def per_group(name, kernel):
+        # a group's scan is sized to its bytes: a ~26 KB group is one Python
+        # task, not one per core (session.MIN_SPLIT_BYTES)
         return runner.stage(
             name,
             fp,
             files,
             lambda fs: kernel(
-                spark.read.parquet(*fs), *bcs, nel_mode=nel_mode
+                sized(spark.read.parquet(*fs), fs), *broadcasts(),
+                nel_mode=nel_mode,
             ),
             group_size=group_size,
         )

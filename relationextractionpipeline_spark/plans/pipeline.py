@@ -43,6 +43,7 @@ from relationextractionpipeline_spark.operators import (
     segment,
     triples as triples_op,
 )
+from relationextractionpipeline_spark.session import sized
 
 
 def load_inputs(spark: SparkSession, paths: Dict[str, str]) -> Tuple[DataFrame, DataFrame, DataFrame]:
@@ -253,7 +254,12 @@ def run_pipeline(
     """
     transcripts, entity_kb, figer_map = load_inputs(spark, paths)
     if input_partitions:
-        transcripts = transcripts.repartition(input_partitions)
+        turns = transcripts = transcripts.repartition(input_partitions)
+    else:
+        # the Python crossings read the scan sized to its bytes (every
+        # Python task has a fixed cost); the JVM-only assembly keeps the
+        # plain scan and its one hash Exchange
+        turns = sized(transcripts, paths["transcripts"])
     if mode == "auto":
         big_kb = (
             entity_kb.limit(AUTO_JOINLINK_KB_ROWS + 1).count()
@@ -263,9 +269,7 @@ def run_pipeline(
     if mode == "staged-joinlink":
         # big-KB path: never driver-collects the candidate table
         kbi_bc = build_gazetteer_broadcast(spark, entity_kb)
-        out = run_staged_joinlink(
-            transcripts, kbi_bc, entity_kb, figer_map, nel_mode
-        )
+        out = run_staged_joinlink(turns, kbi_bc, entity_kb, figer_map, nel_mode)
         out["transcripts"] = transcripts
         out["entity_kb"] = entity_kb
         out["figer_map"] = figer_map
@@ -273,16 +277,12 @@ def run_pipeline(
         return out
     # "fused" and "staged" (the older spelling, still accepted) are one path
     kb_bc, kb_index_bc, figer_bc = build_broadcasts(spark, entity_kb, figer_map)
-    triples = run_fused(
-        transcripts, kb_bc, kb_index_bc, figer_bc, nel_mode=nel_mode
-    )
+    triples = run_fused(turns, kb_bc, kb_index_bc, figer_bc, nel_mode=nel_mode)
     out = {
         "triples": triples,
-        "links": fused.links_fused(
-            transcripts, kb_bc, kb_index_bc, figer_bc, nel_mode
-        ),
+        "links": fused.links_fused(turns, kb_bc, kb_index_bc, figer_bc, nel_mode),
         "types": triples_op.distinct_types(triples),
-        "parsed": parse_turns(transcripts),
+        "parsed": parse_turns(turns),
     }
     out["transcripts"] = transcripts
     out["entity_kb"] = entity_kb

@@ -6,11 +6,16 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
+
+import pandas as pd
+import pytest
 
 from relationextractionpipeline_spark.operators import canonicalize
 from relationextractionpipeline_spark.plans import manifests, pipeline
 from tests.test_pipeline import TRIPLE_KEY, _triple_set
+from tests.test_session import split_conf
 
 
 def _events(runner):
@@ -97,8 +102,13 @@ def test_checkpointed_graph_tail_resume(spark, tiny_paths, tmp_path, monkeypatch
     }
     assert r2["edges"].count() == edges1
 
-    # full resume: every stage (incl. graph) resumed, and neither
-    # clustering entry point (driver core or distributed CC) ran
+    # full resume: every stage (incl. graph) resumed, neither clustering
+    # entry point (driver core or distributed CC) ran, and no broadcast
+    # dict was built
+    def no_broadcasts(*_a, **_kw):
+        raise AssertionError("a full resume built the broadcasts")
+
+    monkeypatch.setattr(pipeline, "build_broadcasts", no_broadcasts)
     calls = []
     for name in ("_driver_components", "connected_components"):
         real = getattr(canonicalize, name)
@@ -281,3 +291,151 @@ def test_partition_resume_append_recomputes_only_gained_buckets(
     assert _triple_set(r2["triples"].toPandas()) == _triple_set(
         direct_triples.toPandas()
     )
+
+
+def _shard(tiny_paths, tdir, n=3):
+    """The tiny transcripts as ``n`` files, so a checkpoint has groups."""
+    os.makedirs(tdir)
+    pdf = pd.read_parquet(tiny_paths["transcripts"])
+    for s in range(n):
+        pdf.iloc[s::n].to_parquet(
+            os.path.join(tdir, f"part-{s}.parquet"), index=False
+        )
+    return dict(tiny_paths, transcripts=tdir)
+
+
+@pytest.fixture(scope="module")
+def sharded_ck(spark, tiny_paths, tmp_path_factory):
+    """A cold group_size=1 checkpoint over three shards, and its triples."""
+    root = tmp_path_factory.mktemp("faults")
+    paths = _shard(tiny_paths, str(root / "tshard"))
+    ck = str(root / "ck")
+    r = manifests.run_checkpointed(spark, paths, ck, group_size=1)
+    groups = sorted(e["group"] for e in r["runner"].events)
+    return paths, ck, groups, _triple_set(r["triples"].toPandas())
+
+
+def _no_manifest(gdir, mpath):
+    os.remove(mpath)
+
+
+def _no_success(gdir, mpath):
+    os.remove(os.path.join(gdir, "_SUCCESS"))
+
+
+def _torn_manifest(gdir, mpath):
+    with open(mpath) as f:
+        text = f.read()
+    with open(mpath, "w") as f:
+        f.write(text[: len(text) // 2])
+
+
+def _empty_manifest(gdir, mpath):
+    open(mpath, "w").close()
+
+
+@pytest.mark.parametrize(
+    "fault", [_no_manifest, _no_success, _torn_manifest, _empty_manifest],
+    ids=["no_manifest", "no_success", "torn_manifest", "empty_manifest"],
+)
+def test_fault_recomputes_only_that_group(spark, sharded_ck, fault):
+    """A group whose checkpoint is damaged (parquet without a manifest, a
+    manifest without ``_SUCCESS``, a torn or empty manifest) recomputes;
+    every other group resumes, and the triples equal the cold run's.  The
+    rerun leaves the checkpoint whole again."""
+    paths, ck, groups, cold = sharded_ck
+    gi = groups[-1]
+    gdir = os.path.join(ck, "triples", f"g{gi:05d}")
+    fault(gdir, gdir + "._manifest.json")
+    r = manifests.run_checkpointed(spark, paths, ck, group_size=1)
+    acts = {(e["group"], e["action"]) for e in r["runner"].events}
+    assert acts == {(g, "computed" if g == gi else "resumed") for g in groups}
+    assert _triple_set(r["triples"].toPandas()) == cold
+
+
+def test_old_format_group_with_pid_recomputes(
+    spark, tiny_paths, tmp_path, monkeypatch
+):
+    """Group outputs written before footer counting carry a ``_pid``
+    column; the stage-code version bump makes them recompute, so a resume
+    never unions them with ``_pid``-less groups."""
+    paths = _shard(tiny_paths, str(tmp_path / "tshard"))
+    fresh = manifests.run_checkpointed(
+        spark, paths, str(tmp_path / "fresh"), group_size=1
+    )["triples"]
+
+    ck = str(tmp_path / "ck")
+    with monkeypatch.context() as m:
+        m.setattr(manifests, "STAGE_CODE_VERSION", "1")
+        r1 = manifests.run_checkpointed(spark, paths, ck, group_size=1)
+    groups = sorted(e["group"] for e in r1["runner"].events)
+    # rewrite one group as the old format wrote it: data plus _pid
+    gdir = os.path.join(ck, "triples", f"g{groups[0]:05d}")
+    old = pd.read_parquet(gdir).assign(_pid=0)
+    for f in os.listdir(gdir):
+        if f.endswith(".parquet"):
+            os.remove(os.path.join(gdir, f))
+    old.to_parquet(os.path.join(gdir, "part-00000-old-c000.snappy.parquet"),
+                   index=False)
+
+    r2 = manifests.run_checkpointed(spark, paths, ck, group_size=1)
+    assert _events(r2["runner"]) == {("triples", "computed")}
+    assert r2["triples"].schema == fresh.schema
+    assert _triple_set(r2["triples"].toPandas()) == _triple_set(fresh.toPandas())
+
+
+def test_group_kernel_input_is_one_partition(
+    spark, tiny_paths, tmp_path, monkeypatch
+):
+    """Under the CLI's split conf a plain scan of a small group fans out to
+    the cores; the group's kernel input is one partition (the
+    ``MIN_SPLIT_BYTES`` floor)."""
+    files = manifests.list_parquet_files(tiny_paths["transcripts"])
+    seen = []
+    real = pipeline.run_fused
+
+    def spy(transcripts, *a, **kw):
+        seen.append(transcripts.rdd.getNumPartitions())
+        return real(transcripts, *a, **kw)
+
+    monkeypatch.setattr(pipeline, "run_fused", spy)
+    with split_conf(spark, sum(map(os.path.getsize, files))):
+        assert spark.read.parquet(*files).rdd.getNumPartitions() > 1
+        manifests.run_checkpointed(spark, tiny_paths, str(tmp_path / "ck"))
+    assert seen == [1]
+
+
+def test_manifest_counts_equal_spark_counts(spark, tiny_paths, tmp_path):
+    """Footer-read manifest counts: ``rows`` and every ``partitions[i]``
+    equal a Spark count of that group's output, for every stage of a graph
+    run plus one stage that writes several partitions."""
+    ck = str(tmp_path / "ck")
+    r = manifests.run_checkpointed(spark, tiny_paths, ck, graph=True, group_size=2)
+    r["runner"].whole(
+        "spread", "fp", [], lambda: spark.range(0, 1000, numPartitions=5)
+    )
+    mpaths = [
+        os.path.join(ck, stage, f)
+        for stage in sorted(os.listdir(ck))
+        for f in sorted(os.listdir(os.path.join(ck, stage)))
+        if f.endswith("._manifest.json")
+    ]
+    assert {os.path.basename(os.path.dirname(p)) for p in mpaths} == {
+        "triples", "links", "predicates", "entities", "edges", "spread"
+    }
+    for mp in mpaths:
+        m = json.load(open(mp))
+        gout = m["output"]
+        assert m["rows"] == spark.read.parquet(gout).count()
+        by_pid = {}
+        for f in os.listdir(gout):
+            hit = re.match(r"part-(\d+)-", f)
+            if hit:
+                pid = int(hit.group(1))
+                n = spark.read.parquet(os.path.join(gout, f)).count()
+                by_pid[pid] = by_pid.get(pid, 0) + n
+        assert m["partitions"] == [
+            {"pid": p, "rows": n} for p, n in sorted(by_pid.items()) if n
+        ]
+    spread = json.load(open(os.path.join(ck, "spread", "g00000._manifest.json")))
+    assert len(spread["partitions"]) == 5
