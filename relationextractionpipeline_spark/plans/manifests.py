@@ -8,8 +8,8 @@ worker's group.  Here the unit of recovery is a GROUP of input files
 manifest carrying
 
 * an **input fingerprint** (the group's files + sizes + mtimes, the
-  dimension tables, the run's options, the stage-code version) so a
-  resume never silently reuses stale output;
+  dimension tables, the run's options, a hash of the rule sources and the
+  format version) so a resume never silently reuses stale output;
 * **per-partition row counters** (lineage/observability: which partition
   produced how many rows), read from the parquet footers of the group's
   ``part-NNNNN`` files — no read-back scan, no count job;
@@ -31,8 +31,11 @@ from __future__ import annotations
 
 import functools
 import hashlib
+import importlib
+import importlib.util
 import json
 import os
+import pkgutil
 import re
 import time
 from typing import Callable, Dict, List, Optional
@@ -40,19 +43,45 @@ from typing import Callable, Dict, List, Optional
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-# bump to invalidate all checkpoints on rule or format changes ("2": group
-# outputs no longer carry a _pid column)
-STAGE_CODE_VERSION = "2"
+# bump to invalidate all checkpoints on a format change ("2": group outputs
+# no longer carry a _pid column); rule changes are caught by code_fingerprint
+FORMAT_VERSION = "2"
+
+# the rule code a checkpoint's rows depend on: every module of the
+# ``functions`` package, the kernels (fused), canonicalize, and the
+# operators those two import from this package
+_RULE_PACKAGE = "relationextractionpipeline_spark.functions"
+_RULE_MODULES = tuple(
+    f"relationextractionpipeline_spark.operators.{m}"
+    for m in ("fused", "triples", "canonicalize", "sketches")
+)
 
 # Spark's data-file name: part-<partition id>-<job uuid>[-c000].<codec>.parquet
 _PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
 
 
+@functools.cache
+def code_fingerprint() -> str:
+    """Hash of the format version and the rule sources, read through each
+    module's loader, so it is the same from a source tree and from the
+    ``--py-files`` zip of it."""
+    pkg = importlib.import_module(_RULE_PACKAGE)
+    names = sorted(
+        m.name for m in pkgutil.iter_modules(pkg.__path__, _RULE_PACKAGE + ".")
+    )
+    h = hashlib.sha256(FORMAT_VERSION.encode())
+    for name in (_RULE_PACKAGE, *names, *_RULE_MODULES):
+        source = importlib.util.find_spec(name).loader.get_source(name)
+        h.update(f"{name}:{len(source)}:".encode())
+        h.update(source.encode())
+    return h.hexdigest()[:24]
+
+
 def input_fingerprint(paths: List[str], extra: str = "") -> str:
     """Fingerprint of input files (or directories of files): path + size +
-    mtime per contained file, plus the stage-code version."""
+    mtime per contained file, plus the rule code (``code_fingerprint``)."""
     h = hashlib.sha256()
-    h.update(STAGE_CODE_VERSION.encode())
+    h.update(code_fingerprint().encode())
     h.update(extra.encode())
 
     def add(p: str) -> None:
@@ -217,10 +246,11 @@ class PartitionedStageRunner:
         """Run ``build(files)`` once per pending group; return the union scan
         of all group outputs.
 
-        ``fingerprint`` is the SHARED fingerprint (dimension tables + code
-        version) — each group combines it with a fingerprint of its OWN
-        files, so a corpus append invalidates only the groups whose file
-        list or file bytes actually changed, never the whole stage.  (A
+        ``fingerprint`` is the SHARED fingerprint (dimension tables + run
+        options + rule code) — each group combines it with a fingerprint
+        of its OWN files, so a corpus append invalidates only the groups
+        whose file list or file bytes actually changed, never the whole
+        stage.  (A
         dimension-table change still invalidates everything — correct:
         every group's output depends on the dims.)"""
         groups = self.plan_groups(input_files, group_size)

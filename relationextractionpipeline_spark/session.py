@@ -5,9 +5,13 @@ round-robin batch files, ``main.py:51-61,144-151``; ``helper_functions.py:94-107
 with Spark's scheduler: AQE on (runtime re-planning + skew-join splitting),
 Arrow on (all Python stages are vectorized pandas UDFs), UTC session time.
 
-In the sandbox this runs ``local[N]`` (single JVM); on a real cluster the same
-session conf ships via ``spark-submit --py-files`` — nothing here is
-local-mode-specific except the optional driver-memory default.
+Locally this runs ``local[N]`` (single JVM); on a real cluster the same
+session conf ships via ``spark-submit --py-files``.  Two defaults apply to
+``local*`` masters only, where every path the driver sees is the workers'
+too: the driver-memory default, and Python workers forked by ``pydaemon``
+(no per-task zip re-read) with this package's root on their path.
+``extra_conf`` overrides either; a worker ``PYTHONPATH`` it passes is kept,
+after the package root.
 """
 
 from __future__ import annotations
@@ -16,6 +20,11 @@ import os
 from typing import Dict, List, Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession
+
+from relationextractionpipeline_spark import pydaemon
+
+# the directory (or --py-files zip) that holds this package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_driver_memory() -> str:
@@ -71,7 +80,17 @@ def get_spark(
     )
     if shuffle_partitions is not None:
         b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    if master.startswith("local"):
+        # workers start from pydaemon, which must import before any
+        # --py-files reach them: put this package's root (a directory, or
+        # the shipped zip) ahead of the caller's worker path
+        b = b.config("spark.python.daemon.module", pydaemon.__name__)
+        extra_conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            p for p in (_PACKAGE_ROOT, extra_conf.get("spark.executorEnv.PYTHONPATH"))
+            if p
+        )
+    for k, v in extra_conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -91,13 +110,15 @@ def dir_bytes(path: str) -> int:
 
 # Input-split floor for a Python crossing: no task of a per-row Python stage
 # reads less than this many input bytes unless the whole input is smaller.
-# Every Python task pays a fixed ~0.2 CPU-s however few rows it has: trivial
-# mapInPandas tasks on warm workers (local[4], 4-core VM, CPython 3.11.7)
-# cost 3.5 CPU-s for 16 tasks and 12.1 for 64, JVM included.  Nearly all of
-# it is importlib.invalidate_caches(), which pyspark's worker calls once per
-# task (worker_util.setup_spark_files): before CPython 3.13 it eagerly
-# re-reads the pyspark.zip directory (1,328 entries) once per zipimporter,
-# ~66 ms per call with a dozen of them.
+# Every Python task pays a fixed cost however few rows it has.  Trivial
+# mapInPandas tasks on warm workers (local[4], 4-core VM, CPython 3.11.7),
+# 64 tasks: with pyspark's own daemon 20.5-21.5 CPU-s, 17.5 of it in Python
+# workers, nearly all the per-task re-read of pyspark.zip that pydaemon
+# skips; with pydaemon 5.8-7.6 CPU-s, 3.1-3.2 in Python.  What is left is
+# ~0.05 Python and ~0.05 JVM CPU-s per task (task set-up, the Arrow stream,
+# scheduling): a 26 KB checkpoint group scanned as 4-7 tasks would still
+# pay it 4-7 times, for no parallel gain on a fraction of a second of work,
+# so sized() and this floor stay.
 MIN_SPLIT_BYTES = 256 * 1024
 
 

@@ -8,6 +8,9 @@ import json
 import os
 import re
 import shutil
+import signal
+import subprocess
+import sys
 
 import pandas as pd
 import pytest
@@ -15,7 +18,7 @@ import pytest
 from relationextractionpipeline_spark.operators import canonicalize
 from relationextractionpipeline_spark.plans import manifests, pipeline
 from tests.test_pipeline import TRIPLE_KEY, _triple_set
-from tests.test_session import split_conf
+from tests.test_session import REPO, split_conf
 
 
 def _events(runner):
@@ -357,7 +360,7 @@ def test_old_format_group_with_pid_recomputes(
     spark, tiny_paths, tmp_path, monkeypatch
 ):
     """Group outputs written before footer counting carry a ``_pid``
-    column; the stage-code version bump makes them recompute, so a resume
+    column; the format version bump makes them recompute, so a resume
     never unions them with ``_pid``-less groups."""
     paths = _shard(tiny_paths, str(tmp_path / "tshard"))
     fresh = manifests.run_checkpointed(
@@ -366,7 +369,7 @@ def test_old_format_group_with_pid_recomputes(
 
     ck = str(tmp_path / "ck")
     with monkeypatch.context() as m:
-        m.setattr(manifests, "STAGE_CODE_VERSION", "1")
+        m.setattr(manifests, "code_fingerprint", lambda: "format 1")
         r1 = manifests.run_checkpointed(spark, paths, ck, group_size=1)
     groups = sorted(e["group"] for e in r1["runner"].events)
     # rewrite one group as the old format wrote it: data plus _pid
@@ -439,3 +442,101 @@ def test_manifest_counts_equal_spark_counts(spark, tiny_paths, tmp_path):
         ]
     spread = json.load(open(os.path.join(ck, "spread", "g00000._manifest.json")))
     assert len(spread["partitions"]) == 5
+
+
+class _Sigkill:
+    """Unpickles as a SIGKILL of the unpickling process."""
+
+    def __reduce__(self):
+        return signal.raise_signal, (signal.SIGKILL,)
+
+
+def test_python_worker_killed_mid_kernel(spark, tiny_paths, tmp_path, monkeypatch):
+    """A Python worker SIGKILLed inside one group's kernel fails the run;
+    that group publishes neither a manifest nor ``_SUCCESS``.  A rerun in
+    the same session, on fresh workers, resumes the groups published
+    before the kill, recomputes only the killed group and those not yet
+    run, and its triples equal a cold run's."""
+    paths = _shard(tiny_paths, str(tmp_path / "tshard"), n=8)
+    cold = manifests.run_checkpointed(
+        spark, paths, str(tmp_path / "cold"), group_size=1
+    )
+    groups = sorted(e["group"] for e in cold["runner"].events)
+    assert len(groups) >= 3
+    killed = groups[1]
+
+    ck = str(tmp_path / "ck")
+    real = pipeline.run_fused
+    poison = spark.sparkContext.broadcast(_Sigkill())
+    calls = []
+
+    def kill_second_group(transcripts, kb_bc, kb_index_bc, figer_bc, **kw):
+        # the kernel reads figer_bc.value in its worker: the second group's
+        # worker dies there, mid-kernel
+        calls.append(1)
+        if len(calls) == 2:
+            figer_bc = poison
+        return real(transcripts, kb_bc, kb_index_bc, figer_bc, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "run_fused", kill_second_group)
+        with pytest.raises(Exception, match="(?i)python worker"):
+            manifests.run_checkpointed(spark, paths, ck, group_size=1)
+    poison.destroy()
+    for gi in groups:
+        gdir = os.path.join(ck, "triples", f"g{gi:05d}")
+        published = gi < killed
+        assert os.path.exists(gdir + "._manifest.json") == published, gi
+        assert os.path.exists(os.path.join(gdir, "_SUCCESS")) == published, gi
+
+    r = manifests.run_checkpointed(spark, paths, ck, group_size=1)
+    acts = {(e["group"], e["action"]) for e in r["runner"].events}
+    assert acts == {(g, "resumed" if g < killed else "computed") for g in groups}
+    assert _triple_set(r["triples"].toPandas()) == _triple_set(
+        cold["triples"].toPandas()
+    )
+
+
+def _code_fingerprint_of(root):
+    """``code_fingerprint()`` of the package under ``root``, in a fresh
+    interpreter."""
+    proc = subprocess.run(
+        [sys.executable, "-c",
+         "from relationextractionpipeline_spark.plans import manifests; "
+         "print(manifests.code_fingerprint())"],
+        cwd=root, env=dict(os.environ, PYTHONPATH=root),
+        capture_output=True, text=True, check=True,
+    )
+    return proc.stdout.strip()
+
+
+@pytest.mark.parametrize("edit", [None, "functions/rules.py", "operators/fused.py",
+                                  "operators/canonicalize.py"])
+def test_code_fingerprint_follows_rule_sources(tmp_path, edit):
+    """A copy of the package has this package's code fingerprint until one
+    of its rule sources changes."""
+    pkg = "relationextractionpipeline_spark"
+    shutil.copytree(
+        os.path.join(REPO, pkg), str(tmp_path / pkg),
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    if edit:
+        with open(tmp_path / pkg / edit, "a") as f:
+            f.write("\n# edited\n")
+    same = _code_fingerprint_of(str(tmp_path)) == manifests.code_fingerprint()
+    assert same == (edit is None)
+
+
+def test_rule_code_keys_the_checkpoint(spark, tiny_paths, tmp_path, monkeypatch):
+    """Unchanged rule sources, hashed afresh, resume every group; other rule
+    code recomputes every group."""
+    ck = str(tmp_path / "ck")
+    manifests.run_checkpointed(spark, tiny_paths, ck, group_size=1)
+    monkeypatch.setattr(
+        manifests, "code_fingerprint", manifests.code_fingerprint.__wrapped__
+    )
+    r = manifests.run_checkpointed(spark, tiny_paths, ck, group_size=1)
+    assert _events(r["runner"]) == {("triples", "resumed")}
+    monkeypatch.setattr(manifests, "code_fingerprint", lambda: "other rules")
+    r = manifests.run_checkpointed(spark, tiny_paths, ck, group_size=1)
+    assert _events(r["runner"]) == {("triples", "computed")}
