@@ -128,14 +128,52 @@ _DISTMULT_MEMO: dict = {}
 # per sf_dir and let each model train from the same frame
 _KGFACTS_MEMO: dict = {}
 
+# extraction run + canonical graph memo per (session, sf_dir): the KG
+# queries all start from the same run and graph, so each is built once
+# (extraction, the entity-refs checkpoint and the clustering collects) and
+# read back by every consumer, as a production pipeline reads its
+# materialized graph stage (plans/manifests.py).  cache.memo rebuilds an
+# entry once release_all(checkpoints=True) has freed its blocks.
+_KG_MEMO: dict = {}
+
+
+def _kg_run(spark: SparkSession, sf_dir: str) -> dict:
+    return cache.memo(
+        _KG_MEMO, ("run", os.path.normpath(sf_dir)), spark.sparkContext,
+        lambda: pipeline.run_pipeline(
+            spark, _synthetic_paths(sf_dir), mode="staged"
+        ),
+    )
+
+
+def _kg_canonical(spark: SparkSession, sf_dir: str):
+    """(entities, edges) of ``canonicalize`` over the memoized run."""
+    from relationextractionpipeline_spark.operators import canonicalize
+
+    def build():
+        run = _kg_run(spark, sf_dir)
+        return canonicalize.canonicalize(run["triples"], run["links"])
+
+    return cache.memo(
+        _KG_MEMO, ("canonical", os.path.normpath(sf_dir)), spark.sparkContext,
+        build,
+    )
+
+
+def _kg_graph(spark: SparkSession, sf_dir: str) -> dict:
+    """``materialize_graph`` over the memoized run."""
+    return cache.memo(
+        _KG_MEMO, ("graph", os.path.normpath(sf_dir)), spark.sparkContext,
+        lambda: pipeline.materialize_graph(_kg_run(spark, sf_dir)),
+    )
+
 
 def _kg_facts(spark: SparkSession, sf_dir: str):
     from relationextractionpipeline_spark.operators import kgembed
 
     key = os.path.normpath(sf_dir)
     if key not in _KGFACTS_MEMO:
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        graph = pipeline.materialize_graph(run)
+        graph = _kg_graph(spark, sf_dir)
         _KGFACTS_MEMO[key] = kgembed.fact_table(graph["edges"]).toPandas()
     return spark.createDataFrame(_KGFACTS_MEMO[key])
 
@@ -433,13 +471,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["kg_links_ctx_tdf"] = kg_links_ctx_tdf
 
     def kg_entities(spark, sf_dir):
-        from relationextractionpipeline_spark.operators import canonicalize
-
         if _small_scale(sf_dir):
             # sequential union-find replica for the DuckDB gate
             oracle_mat.entity_clusters(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        entities, _edges = canonicalize.canonicalize(run["triples"], run["links"])
+        entities, _edges = _kg_canonical(spark, sf_dir)
         return entities.select(
             "canonical_id",
             F.size("keys").alias("n_keys"),
@@ -454,12 +489,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         first thing an operator looks at after a canonicalization run
         (one giant component = over-merging; all singletons =
         under-merging).  One aggregate over the entities rollup."""
-        from relationextractionpipeline_spark.operators import canonicalize
-
         if _small_scale(sf_dir):
             oracle_mat.entity_clusters(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        entities, _edges = canonicalize.canonicalize(run["triples"], run["links"])
+        entities, _edges = _kg_canonical(spark, sf_dir)
         return (
             entities.select(F.size("keys").alias("component_size"))
             .groupBy("component_size")
@@ -476,12 +508,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         eids are xxhash64 of exactly these, not SQL-reproducible in DuckDB);
         the oracle rewrites the sequential triples through the sequential
         union-find key map."""
-        from relationextractionpipeline_spark.operators import canonicalize
-
         if _small_scale(sf_dir):
             oracle_mat.entity_clusters(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        _entities, edges = canonicalize.canonicalize(run["triples"], run["links"])
+        _entities, edges = _kg_canonical(spark, sf_dir)
         return edges.select(
             "conv_id", "turn_idx", "sent_idx", "rel_idx",
             "subj", "pred", "obj", "subj_canonical", "obj_canonical",
@@ -496,15 +525,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         synthetic-corpus export a KG-grounded pretraining mix consumes.
         Gated against the sequential union-find keymap + the same rendering
         replayed in SQL."""
-        from relationextractionpipeline_spark.operators import (
-            canonicalize,
-            ontology,
-        )
+        from relationextractionpipeline_spark.operators import ontology
 
         if _small_scale(sf_dir):
             oracle_mat.entity_clusters(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        _entities, edges = canonicalize.canonicalize(run["triples"], run["links"])
+        _entities, edges = _kg_canonical(spark, sf_dir)
         return ontology.verbalize(edges)
 
     q["kg_verbalize"] = kg_verbalize
@@ -539,8 +564,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         if _small_scale(sf_dir):
             oracle_mat.entity_clusters(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        links = run["links"]
+        links = _kg_run(spark, sf_dir)["links"]
         b0 = links.where(F.pmod(F.xxhash64("conv_id"), F.lit(2)) == 0)
         b1 = links.where(F.pmod(F.xxhash64("conv_id"), F.lit(2)) == 1)
         state = canonicalize.merge_entity_batch(
@@ -565,12 +589,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         asc) so the top-50 SET is stable; unlinked (null) endpoints are
         excluded.  Oracle: the same rollup in SQL over the sequential
         triples rewritten through the sequential union-find key map."""
-        from relationextractionpipeline_spark.operators import canonicalize
-
         if _small_scale(sf_dir):
             oracle_mat.entity_clusters(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        _entities, edges = canonicalize.canonicalize(run["triples"], run["links"])
+        _entities, edges = _kg_canonical(spark, sf_dir)
         ends = edges.select(
             F.col("subj_canonical").alias("entity"),
             F.col("obj_canonical").alias("other"),
@@ -619,12 +640,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         observable recall trade (hubs are exactly the kg_degree head),
         identical on both engines — the standard mitigation at 10^12-turn
         scale where a hub's two-hop set would be billions of pairs."""
-        from relationextractionpipeline_spark.operators import canonicalize
-
         if _small_scale(sf_dir):
             oracle_mat.entity_clusters(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        _entities, edges = canonicalize.canonicalize(run["triples"], run["links"])
+        _entities, edges = _kg_canonical(spark, sf_dir)
         ed = (
             edges.where(
                 F.col("subj_canonical").isNotNull()
@@ -686,15 +704,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         DISTINCT edge view (a, b) over the canonical entity graph — the
         input contract of the graphalgs undirected operators.  The edge
         view is checkpointed once; every consumer probes the same blocks."""
-        from relationextractionpipeline_spark.operators import canonicalize
-
         if _small_scale(sf_dir):
             # the shared und_cte oracle reads the sequential triples and
             # the key map: materialize both here, not in query order
             oracle_mat.entity_clusters(_scale_for(sf_dir))
             oracle_mat.oracle_triples(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        entities, edges = canonicalize.canonicalize(run["triples"], run["links"])
+        entities, edges = _kg_canonical(spark, sf_dir)
         ed = (
             edges.where(
                 F.col("subj_canonical").isNotNull()
@@ -837,15 +852,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         sequential numpy replica of the identical recurrence
         (oracle_mat.pagerank_table) — the comparison verifies the
         distributed per-round machinery, not the math."""
-        from relationextractionpipeline_spark.operators import (
-            canonicalize,
-            graphalgs,
-        )
+        from relationextractionpipeline_spark.operators import graphalgs
 
         if _small_scale(sf_dir):
             oracle_mat.pagerank_table(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        _entities, edges = canonicalize.canonicalize(run["triples"], run["links"])
+        _entities, edges = _kg_canonical(spark, sf_dir)
         return graphalgs.pagerank(
             edges.select(
                 F.col("subj_canonical").alias("src"),
@@ -863,15 +874,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         graph — iterative frontier expansion with O(1)-working-set
         checkpoints (operators/graphalgs.bfs_distances).  Oracle is an
         INDEPENDENT DuckDB recursive CTE (not a sequential replica)."""
-        from relationextractionpipeline_spark.operators import (
-            canonicalize,
-            graphalgs,
-        )
+        from relationextractionpipeline_spark.operators import graphalgs
 
         if _small_scale(sf_dir):
             oracle_mat.entity_clusters(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        _entities, edges = canonicalize.canonicalize(run["triples"], run["links"])
+        _entities, edges = _kg_canonical(spark, sf_dir)
         ed = edges.where(
             F.col("subj_canonical").isNotNull()
             & F.col("obj_canonical").isNotNull()
@@ -899,15 +906,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         frequent neighbor label, min-label ties, 5 rounds).  Oracle =
         sequential replica of the identical recurrence
         (oracle_mat.lpa_table)."""
-        from relationextractionpipeline_spark.operators import (
-            canonicalize,
-            graphalgs,
-        )
+        from relationextractionpipeline_spark.operators import graphalgs
 
         if _small_scale(sf_dir):
             oracle_mat.lpa_table(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        _entities, edges = canonicalize.canonicalize(run["triples"], run["links"])
+        _entities, edges = _kg_canonical(spark, sf_dir)
         return graphalgs.label_propagation(
             edges.select(
                 F.col("subj_canonical").alias("src"),
@@ -923,15 +926,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         corrupted objects, K=3): deterministic md5-derived candidates,
         dense entity index via the distributed cumsum, one anti-join
         against the true-triple set (operators/negatives.py)."""
-        from relationextractionpipeline_spark.operators import (
-            canonicalize,
-            negatives,
-        )
+        from relationextractionpipeline_spark.operators import negatives
 
         if _small_scale(sf_dir):
             oracle_mat.entity_clusters(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        entities, edges = canonicalize.canonicalize(run["triples"], run["links"])
+        entities, edges = _kg_canonical(spark, sf_dir)
         return negatives.negative_samples(
             edges.select(
                 F.col("subj_canonical").alias("subj"),
@@ -949,15 +948,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         unique fixpoint, graphalgs.k_core) — the periphery filter run
         before community/centrality analysis.  Oracle = sequential peel
         replica (oracle_mat.kcore_table)."""
-        from relationextractionpipeline_spark.operators import (
-            canonicalize,
-            graphalgs,
-        )
+        from relationextractionpipeline_spark.operators import graphalgs
 
         if _small_scale(sf_dir):
             oracle_mat.kcore_table(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        _entities, edges = canonicalize.canonicalize(run["triples"], run["links"])
+        _entities, edges = _kg_canonical(spark, sf_dir)
         return graphalgs.k_core(
             edges.select(
                 F.col("subj_canonical").alias("src"),
@@ -1030,15 +1025,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         Dijkstra over the same weighted pairs (oracle_mat.sssp_table) —
         an INDEPENDENT algorithm converging to the same fixpoint, so the
         comparison gates the distributed relaxation machinery."""
-        from relationextractionpipeline_spark.operators import (
-            canonicalize,
-            graphalgs,
-        )
+        from relationextractionpipeline_spark.operators import graphalgs
 
         if _small_scale(sf_dir):
             oracle_mat.sssp_table(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        _entities, edges = canonicalize.canonicalize(run["triples"], run["links"])
+        _entities, edges = _kg_canonical(spark, sf_dir)
         pairs = (
             edges.where(
                 F.col("subj_canonical").isNotNull()
@@ -1143,17 +1134,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         entity ranking; same checkpointed power-iteration machinery,
         separate arithmetic path (graphalgs.pagerank(seeds=...)).
         Oracle = numpy replica with the identical association."""
-        from relationextractionpipeline_spark.operators import (
-            canonicalize,
-            graphalgs,
-        )
+        from relationextractionpipeline_spark.operators import graphalgs
 
         if _small_scale(sf_dir):
             oracle_mat.pagerank_table(
                 _scale_for(sf_dir), personalized_min_seed=True
             )
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        _entities, edges = canonicalize.canonicalize(run["triples"], run["links"])
+        _entities, edges = _kg_canonical(spark, sf_dir)
         ed = edges.where(
             F.col("subj_canonical").isNotNull()
             & F.col("obj_canonical").isNotNull()
@@ -1180,15 +1167,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         KG actually wants (graphalgs.pagerank_weighted; the unweighted
         path stays pinned).  Oracle = numpy replica of the identical
         weighted recurrence (oracle_mat.pagerank_weighted_table)."""
-        from relationextractionpipeline_spark.operators import (
-            canonicalize,
-            graphalgs,
-        )
+        from relationextractionpipeline_spark.operators import graphalgs
 
         if _small_scale(sf_dir):
             oracle_mat.pagerank_weighted_table(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        _entities, edges = canonicalize.canonicalize(run["triples"], run["links"])
+        _entities, edges = _kg_canonical(spark, sf_dir)
         return graphalgs.pagerank_weighted(
             edges.select(
                 F.col("subj_canonical").alias("src"),
@@ -1207,15 +1190,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         PageRank's single score (graphalgs.hits, L1-normalized per round).
         Oracle = numpy replica of the identical mutual recursion
         (oracle_mat.hits_table)."""
-        from relationextractionpipeline_spark.operators import (
-            canonicalize,
-            graphalgs,
-        )
+        from relationextractionpipeline_spark.operators import graphalgs
 
         if _small_scale(sf_dir):
             oracle_mat.hits_table(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        _entities, edges = canonicalize.canonicalize(run["triples"], run["links"])
+        _entities, edges = _kg_canonical(spark, sf_dir)
         return graphalgs.hits(
             edges.select(
                 F.col("subj_canonical").alias("src"),
@@ -1240,10 +1219,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         transcripts)."""
         if _small_scale(sf_dir):
             oracle_mat.entity_clusters(_scale_for(sf_dir))
-        from relationextractionpipeline_spark.operators import canonicalize
-
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        _entities, edges = canonicalize.canonicalize(run["triples"], run["links"])
+        _entities, edges = _kg_canonical(spark, sf_dir)
         ts = spark.read.parquet(_synthetic_paths(sf_dir)["transcripts"]).select(
             "conv_id", "turn_idx", "ts"
         )
@@ -1304,8 +1280,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         if _small_scale(sf_dir):
             oracle_mat.entity_clusters(_scale_for(sf_dir))
             oracle_mat.predicate_clusters(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        graph = pipeline.materialize_graph(run)
+        graph = _kg_graph(spark, sf_dir)
         return ontology.functionality(graph["edges"])
 
     q["kg_functionality"] = kg_functionality
@@ -1323,8 +1298,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         if _small_scale(sf_dir):
             oracle_mat.entity_clusters(_scale_for(sf_dir))
             oracle_mat.predicate_clusters(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        graph = pipeline.materialize_graph(run)
+        graph = _kg_graph(spark, sf_dir)
         return ontology.mine_rules(graph["edges"], min_support=2)
 
     q["kg_rules"] = kg_rules
@@ -1347,8 +1321,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         if _small_scale(sf_dir):
             oracle_mat.entity_clusters(_scale_for(sf_dir))
             oracle_mat.predicate_clusters(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        graph = pipeline.materialize_graph(run)
+        graph = _kg_graph(spark, sf_dir)
         return ontology.mine_chain_rules(
             graph["edges"], min_support=2, bridge_fanout=64
         )
@@ -1370,8 +1343,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         if _small_scale(sf_dir):
             oracle_mat.entity_clusters(_scale_for(sf_dir))
             oracle_mat.predicate_clusters(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        graph = pipeline.materialize_graph(run)
+        graph = _kg_graph(spark, sf_dir)
         return ontology.apply_chain_rules(
             graph["edges"], min_support=5, min_pca=0.5, bridge_fanout=64
         )
@@ -1393,8 +1365,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         if _small_scale(sf_dir):
             oracle_mat.entity_clusters(_scale_for(sf_dir))
             oracle_mat.predicate_clusters(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        graph = pipeline.materialize_graph(run)
+        graph = _kg_graph(spark, sf_dir)
         return ontology.resolve_functional_conflicts(
             graph["edges"], min_functionality=0.8
         )
@@ -1410,8 +1381,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         if _small_scale(sf_dir):
             oracle_mat.entity_clusters(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        graph = pipeline.materialize_graph(run)
+        graph = _kg_graph(spark, sf_dir)
         return ontology.entity_salience(graph["edges"], top_k=5)
 
     q["kg_salience"] = kg_salience
@@ -1423,8 +1393,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         if _small_scale(sf_dir):
             oracle_mat.entity_clusters(_scale_for(sf_dir))
             oracle_mat.predicate_clusters(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        return pipeline.materialize_graph(run)
+        return _kg_graph(spark, sf_dir)
 
     def kg_motif(spark, sf_dir):
         """Graph-pattern query surface (operators/motif.find — the
@@ -2441,15 +2410,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         stays EXACT at 10^12-turn scale (operators/graphalgs.
         metapath_census).  Two groupBys + one equi-join, every shuffle
         keyed on canonical entity strings."""
-        from relationextractionpipeline_spark.operators import (
-            canonicalize,
-            graphalgs,
-        )
+        from relationextractionpipeline_spark.operators import graphalgs
 
         if _small_scale(sf_dir):
             oracle_mat.entity_clusters(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        _entities, edges = canonicalize.canonicalize(run["triples"], run["links"])
+        _entities, edges = _kg_canonical(spark, sf_dir)
         facts = edges.select(
             F.col("subj_canonical").alias("s"),
             "pred",
@@ -2468,12 +2433,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         transform + explode, no UDF); non-path types ('none') are
         excluded.  One explode + one distinct-aggregate; lattice depth
         bounds the expansion factor (FIGER paths: ≤2)."""
-        from relationextractionpipeline_spark.operators import canonicalize
-
         if _small_scale(sf_dir):
             oracle_mat.entity_clusters(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        entities, _edges = canonicalize.canonicalize(run["triples"], run["links"])
+        entities, _edges = _kg_canonical(spark, sf_dir)
         typed = entities.select(
             "canonical_id", F.explode("types").alias("figer")
         ).where(F.col("figer").startswith("/"))
@@ -2509,8 +2471,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         if _small_scale(sf_dir):
             oracle_mat.entity_clusters(_scale_for(sf_dir))
-        run = pipeline.run_pipeline(spark, _synthetic_paths(sf_dir), mode="staged")
-        _entities, edges = canonicalize.canonicalize(run["triples"], run["links"])
+        _entities, edges = _kg_canonical(spark, sf_dir)
         facts = edges.select(
             F.col("subj_canonical").alias("s"),
             F.col("pred").alias("p"),

@@ -29,9 +29,11 @@ so the registered tail is O(1) blocks per operator call).
 
 from __future__ import annotations
 
-from typing import Dict, List, Tuple
+from typing import Callable, Dict, List, Tuple, TypeVar
 
 from pyspark.sql import DataFrame
+
+T = TypeVar("T")
 
 _TRACKED: List[DataFrame] = []
 # id(checkpointed df) -> (SparkContext, frozenset of persistent RDD ids the
@@ -98,6 +100,29 @@ def free_checkpoint(df: DataFrame) -> None:
     ent = _CHECKPOINT_IDS.pop(id(df), None)
     if ent is not None:
         _free_rdd_ids(ent[0], ent[1])
+
+
+def memo(store: dict, key, sc, build: Callable[[], T]) -> T:
+    """``build()``, run once per ``key`` for the SparkContext ``sc``.
+
+    A hit is reused only while every checkpoint the build registered still
+    holds its blocks: after ``release_all(checkpoints=True)``, or the exit
+    of the ``scope()`` it was built in, the value would raise on its next
+    action, so it is built again.  The entry pins those checkpoint
+    DataFrames, so their ``id()`` cannot be reused while it lives."""
+    hit = store.get(key)
+    if hit is not None:
+        hit_sc, ckpts, value = hit
+        if hit_sc is sc and all(
+            _CHECKPOINT_IDS.get(k, (None, None, None))[2] is df
+            for k, df in ckpts.items()
+        ):
+            return value
+    before = set(_CHECKPOINT_IDS)
+    value = build()
+    ckpts = {k: _CHECKPOINT_IDS[k][2] for k in _CHECKPOINT_IDS.keys() - before}
+    store[key] = (sc, ckpts, value)
+    return value
 
 
 from contextlib import contextmanager

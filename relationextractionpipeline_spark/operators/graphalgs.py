@@ -445,10 +445,13 @@ def hits(
         )
     )
     for _ in range(n_iter):
+        # each raw half-round feeds its scalar sum AND the next join:
+        # persisted, it runs once a round instead of two or three times
         a_raw = (
             ed.join(state.select("node", "hub"), ed["_s"] == F.col("node"))
             .groupBy(F.col("_d").alias("node"))
             .agg(F.sum("hub").alias("a_raw"))
+            .persist()
         )
         sa = a_raw.agg(F.coalesce(F.sum("a_raw"), F.lit(0.0))).collect()[0][0]
         auth = nodes.join(a_raw, "node", "left").select(
@@ -462,6 +465,7 @@ def hits(
             ed.join(auth, ed["_d"] == auth["node"])
             .groupBy(F.col("_s").alias("node"))
             .agg(F.sum("authority").alias("h_raw"))
+            .persist()
         )
         sh = h_raw.agg(F.coalesce(F.sum("h_raw"), F.lit(0.0))).collect()[0][0]
         hub = nodes.join(h_raw, "node", "left").select(
@@ -475,6 +479,8 @@ def hits(
         state = cache.checkpoint(
             hub.join(auth, "node").select("node", "hub", "authority")
         )
+        a_raw.unpersist()
+        h_raw.unpersist()
         cache.free_checkpoint(prev)
     return state.select(
         "node",

@@ -219,8 +219,13 @@ def _grad_means(rows: DataFrame, n_facts: int, unit: float) -> DataFrame:
     ``g = gsum · unit / n_facts`` — the shuffle-order-proof step shared
     verbatim by all three trainers.  ``unit`` is the fixed-point scale of
     the ``g_term`` column (1e-6 for TransE's squared-distance gradients,
-    1e-8 for the DistMult/ComplEx pair products)."""
-    return rows.groupBy(F.col("pid").alias("id"), "j").agg(
+    1e-8 for the DistMult/ComplEx pair products).  Keyed by ``_rel``
+    (the ``r`` role's rows feed the relation table, the others the entity
+    table) as well as ``(id, j)``, so an entity and a relation that share
+    an id never pool their sums."""
+    return rows.groupBy(
+        (F.col("role") == "r").alias("_rel"), F.col("pid").alias("id"), "j"
+    ).agg(
         (
             F.sum("g_term").cast("double")
             * F.lit(float(unit))
@@ -257,26 +262,21 @@ def _rotate_params(
     """One per-iteration parameter rotation, shared by the trainers:
     gradient means → round-6 update (entities renormalized) → checkpoint
     the new tables (lineage truncation), then unpersist the iteration's
-    ``scratch`` frame and free the superseded parameter blocks."""
-    is_ent_role = F.col("role").isin("h", "t", "n")
+    ``scratch`` frame and free the superseded parameter blocks.
+
+    Both tables update from one persisted gradient aggregate, so
+    ``contrib`` (the margin test and its joins) runs once per round, not
+    once per checkpoint."""
+    grads = _grad_means(contrib, n_facts, unit).persist()
     new_ent = cache.checkpoint(
         normalize_unit(
-            _sgd_step(
-                ent_emb,
-                _grad_means(contrib.where(is_ent_role), n_facts, unit),
-                lr,
-            )
+            _sgd_step(ent_emb, grads.where(~F.col("_rel")).drop("_rel"), lr)
         )
     )
     new_rel = cache.checkpoint(
-        _sgd_step(
-            rel_emb,
-            _grad_means(
-                contrib.where(F.col("role") == "r"), n_facts, unit
-            ),
-            lr,
-        )
+        _sgd_step(rel_emb, grads.where(F.col("_rel")).drop("_rel"), lr)
     )
+    grads.unpersist()
     scratch.unpersist()
     cache.free_checkpoint(ent_emb)
     cache.free_checkpoint(rel_emb)

@@ -83,3 +83,35 @@ def test_release_all_frees_operator_caches(spark, tiny_paths):
     )
     # idempotent: a second release is a no-op
     assert cache.release_all() == 0
+
+
+def test_memo_rebuilds_once_its_checkpoints_are_freed(spark):
+    """cache.memo serves one build per key and SparkContext, until the
+    checkpoints that build registered are freed: then the value would
+    raise on its next action, so it is built again."""
+    store, calls = {}, []
+
+    def build():
+        calls.append(1)
+        return cache.checkpoint(spark.range(10).withColumn("y", F.col("id") * 2))
+
+    sc = spark.sparkContext
+    first = cache.memo(store, "k", sc, build)
+    assert cache.memo(store, "k", sc, build) is first
+    assert len(calls) == 1
+
+    with cache.scope():
+        inner = cache.memo(store, "inner", sc, build)
+    assert len(calls) == 2
+    # the scope freed the inner build's checkpoint, not the outer one
+    assert cache.memo(store, "inner", sc, build) is not inner
+    assert cache.memo(store, "k", sc, build) is first
+    assert len(calls) == 3
+
+    cache.release_all(checkpoints=True)
+    again = cache.memo(store, "k", sc, build)
+    assert again is not first and len(calls) == 4
+    assert again.agg(F.sum("y")).first()[0] == 90
+    # a value built in another SparkContext is never served
+    cache.memo(store, "k", object(), build)
+    assert len(calls) == 5

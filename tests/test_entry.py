@@ -8,8 +8,6 @@ import re
 
 import __spark_entry__ as entrymod
 
-SF = "/root/testdata/sf0.001"
-
 
 def test_entry_returns_rows(spark):
     df = entrymod.entry(spark)
@@ -25,9 +23,9 @@ def test_oracle_keys_subset_of_queries():
     assert len(q) >= 20
 
 
-def test_every_query_runs_at_sf0001(spark):
-    for name, fn in entrymod.queries().items():
-        df = fn(spark, SF)
+def test_every_query_runs_at_sf0001(sf0001_queries):
+    for name in entrymod.queries():
+        df = sf0001_queries[name]
         assert df.count() >= 0, name
 
 

@@ -147,7 +147,7 @@ def test_ivf_index_scan_prunes_to_probed_cells(spark, tmp_path):
     spark.catalog.clearCache()
 
 
-def test_no_query_uses_cartesian_or_row_python(spark):
+def test_no_query_uses_cartesian_or_row_python(spark, sf0001_queries):
     """Sweep EVERY driver-contract query's physical plan: no CartesianProduct
     (table-level cross joins are banned — bucketed/broadcast joins only) and
     no row-at-a-time Python evaluation (BatchEvalPython = non-Arrow UDF; all
@@ -155,17 +155,16 @@ def test_no_query_uses_cartesian_or_row_python(spark):
     FlatMapGroupsInPandas)."""
     import __spark_entry__ as entrymod
 
-    sf = "/root/testdata/sf0.001"
     allowed_cross = {"q_embed_topk"}  # explicit broadcast(queries) × corpus
     # the TransE trio returns the MEMOIZED trained model (createDataFrame —
     # a trivial plan), but building the memo runs full training (~2 min at
     # tiny); the meaningful plan (the link-pred scoring join) is asserted
     # training-free in test_linkpred_plan_is_equi_join below
     memo_trained = {"kg_transe", "kg_linkpred", "kg_linkpred_mrr"}
-    for name, fn in entrymod.queries().items():
+    for name in entrymod.queries():
         if name in memo_trained:
             continue
-        plan = _plan(fn(spark, sf))
+        plan = _plan(sf0001_queries[name])
         assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python"
         if name not in allowed_cross:
             assert "CartesianProduct" not in plan, f"{name}: cartesian product"
