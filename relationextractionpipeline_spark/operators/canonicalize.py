@@ -11,19 +11,22 @@ Cluster evidence, in order of strength:
 2. minhash-LSH near-duplicate surface strings, verified by exact shingle
    Jaccard to kill LSH false positives (notInWiki long tail).
 
-Two plans compute the same (node, component) labels, chosen by the size of
-the distinct key table (``_KEY_TABLE_DRIVER_MAX_ROWS``):
+Two plans compute the same key map (ent_key → canonical_id, every distinct
+key), chosen by the size of the distinct key table
+(``_KEY_TABLE_DRIVER_MAX_ROWS``):
 
 * dimension-sized tables (the usual case: distinct entity references and
   predicate strings) are collected once and clustered on the driver by
   ``_driver_components`` — minhash, LSH banding with the same slices and
   bucket cap as ``sketches.lsh_candidate_pairs``, exact Jaccard, same-URL
-  stars, min-label union-find — with no further Spark job;
+  stars, min-label union-find — with no further Spark job, and returned
+  as a local table;
 * larger tables run the distributed plan: LSH candidate pairs joined and
   verified by a pandas UDF, then ``connected_components`` — alternating
   large-star/small-star rounds with ``localCheckpoint()`` per round to cut
   lineage (no GraphFrames dependency), or a driver union-find once the
-  verified edge list is at most ``_CC_DRIVER_MAX_EDGES``.
+  verified edge list is at most ``_CC_DRIVER_MAX_EDGES``; its labels are
+  joined back to the distinct keys (``_canonical_keys``).
 
 Either way the canonical id of a cluster is its min key, and the entities,
 edges and predicate-map joins downstream are the same.
@@ -107,9 +110,12 @@ def _union_find_labels(edges: Iterable[Tuple]) -> Dict:
 
 
 def _labels_frame(spark, labels: Dict, dtype: T.DataType) -> DataFrame:
-    """(node, component) rows of ``labels``, sorted by node, as a local
-    DataFrame with both columns of the node type."""
-    out = pd.DataFrame(sorted(labels.items()), columns=["node", "component"])
+    """(node, component) rows of ``labels``, sorted by node (a null node
+    first), as a local DataFrame with both columns of the node type."""
+    out = pd.DataFrame(
+        sorted(labels.items(), key=lambda kv: (kv[0] is not None, kv[0])),
+        columns=["node", "component"],
+    )
     schema = T.StructType([
         T.StructField("node", dtype),
         T.StructField("component", dtype),
@@ -382,9 +388,11 @@ def _driver_components(
     shingle_k: int,
     jaccard_threshold: float,
 ) -> Optional[DataFrame]:
-    """(node, component) for a distinct key table clustered on the driver,
-    or ``None`` when the table has more than ``_KEY_TABLE_DRIVER_MAX_ROWS``
-    rows (the caller then runs the distributed plan).
+    """(ent_key, canonical_id) for every key of a distinct key table
+    clustered on the driver, as a local table, or ``None`` when the table
+    has more than ``_KEY_TABLE_DRIVER_MAX_ROWS`` rows (the caller then runs
+    the distributed plan and ``_canonical_keys``).  Singletons and a null
+    key map to themselves, as ``_canonical_keys`` maps them.
 
     The same evidence and labels as :func:`candidate_pairs_for_entities`
     followed by :func:`connected_components`: minhash over char shingles
@@ -439,10 +447,25 @@ def _driver_components(
         for ks in by_url.values():
             root = min(ks)
             edges.extend((root, k) for k in ks if k != root)
+    labels = _union_find_labels(edges)
     return _labels_frame(
         keys.sparkSession,
-        _union_find_labels(edges),
+        {k: labels.get(k, k) for k in surfaces},
         keys.schema["ent_key"].dataType,
+    ).toDF("ent_key", "canonical_id")
+
+
+def _canonical_keys(keys: DataFrame, comps: DataFrame) -> DataFrame:
+    """(ent_key, canonical_id) for every distinct key of ``keys``: its
+    component in the (node, component) labels ``comps``, or itself."""
+    return (
+        keys.select("ent_key")
+        .distinct()
+        .join(comps, F.col("ent_key") == F.col("node"), "left")
+        .select(
+            "ent_key",
+            F.coalesce(F.col("component"), F.col("ent_key")).alias("canonical_id"),
+        )
     )
 
 
@@ -479,10 +502,10 @@ def canonicalize_predicates(
     form is the cluster's min string; singletons map to themselves.
     """
     preds = triples.select("pred").distinct().withColumnRenamed("pred", "ent_key")
-    comps = _driver_components(
+    keyed = _driver_components(
         preds, "ent_key", None, n_hashes, bands, shingle_k, jaccard_threshold
     )
-    if comps is None:
+    if keyed is None:
         # tracked persist — caller releases (operators/cache.py)
         sigs = cache.track(
             sketches.with_minhash(
@@ -503,17 +526,11 @@ def canonicalize_predicates(
             .where(F.col("j") >= jaccard_threshold)
             .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         )
-        comps = connected_components(near)
-    return (
-        preds.join(comps, preds["ent_key"] == comps["node"], "left")
-        .select(
-            F.col("ent_key").alias("pred"),
-            F.coalesce(F.col("component"), F.col("ent_key")).alias(
-                "pred_canonical"
-            ),
-        )
-        .withColumn("pred_id", F.xxhash64("pred_canonical"))
-    )
+        keyed = _canonical_keys(preds, connected_components(near))
+    return keyed.select(
+        F.col("ent_key").alias("pred"),
+        F.col("canonical_id").alias("pred_canonical"),
+    ).withColumn("pred_id", F.xxhash64("pred_canonical"))
 
 
 class EntityGraphState(NamedTuple):
@@ -937,21 +954,12 @@ def canonicalize(
     # the batch defaults of candidate_pairs_for_entities, passed to both
     # plans so they cannot drift apart
     params = dict(n_hashes=32, bands=8, shingle_k=3, jaccard_threshold=0.7)
-    comps = _driver_components(ents, "surface", "url", **params)
-    if comps is None:
-        comps = connected_components(
-            candidate_pairs_for_entities(ents, **params)
+    # singletons (no edges) keep their own key as canonical id
+    keyed = _driver_components(ents, "surface", "url", **params)
+    if keyed is None:
+        keyed = _canonical_keys(
+            ents, connected_components(candidate_pairs_for_entities(ents, **params))
         )
-    # singletons (no edges) keep their own key as component
-    keyed = (
-        ents.select("ent_key")
-        .distinct()
-        .join(comps, F.col("ent_key") == F.col("node"), "left")
-        .select(
-            "ent_key",
-            F.coalesce(F.col("component"), F.col("ent_key")).alias("canonical_id"),
-        )
-    )
     entities = (
         refs.join(keyed, "ent_key")
         .groupBy("canonical_id")

@@ -31,17 +31,19 @@ QUERY_BCAST_ROWS = 100_000
 
 
 def _collect_query_pdf(queries: DataFrame, cols, max_rows: int = 100_000):
-    """Driver-collect the (small) query table with a LIMIT probe first —
-    the same guard style as plans.pipeline.build_broadcasts: one cheap job
-    keeps an accidentally-huge query table from OOMing the driver in
-    toPandas().  Beyond the bound, run queries in batches or swap the LUT
-    broadcast for a join against a materialized LUT table."""
-    if queries.limit(max_rows + 1).count() > max_rows:
+    """Driver-collect the (small) query table as one LIMIT collect of
+    ``max_rows + 1`` rows — the same guard style as
+    plans.pipeline.build_broadcasts: an accidentally-huge query table
+    raises instead of OOMing the driver in toPandas().  Beyond the bound,
+    run queries in batches or swap the LUT broadcast for a join against a
+    materialized LUT table."""
+    pdf = queries.select(*cols).limit(max_rows + 1).toPandas()
+    if len(pdf) > max_rows:
         raise ValueError(
             f"query table exceeds {max_rows} rows — too large for the "
             "driver-side LUT build; batch the queries or materialize the LUT"
         )
-    return queries.select(*cols).toPandas()
+    return pdf
 
 
 def _collect_train_matrix(df: DataFrame, id_col: str, vec_col: str,

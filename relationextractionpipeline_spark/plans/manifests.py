@@ -13,10 +13,13 @@ manifest carrying
 * **per-partition row counters** (lineage/observability: which partition
   produced how many rows), read from the parquet footers of the group's
   ``part-NNNNN`` files — no read-back scan, no count job;
-* total rows and output path.
+* total rows and output path;
+* ``schema``: the output's schema as ``spark.read.parquet`` of it infers
+  it (``read_schema``: every field nullable), so a stage reads its groups
+  with it and runs no schema-inference job.
 
-A manifest that is missing, unreadable (torn write) or names no
-``_SUCCESS`` output marks its group as pending: it recomputes.
+A manifest that is missing, unreadable (torn write), has no ``schema`` or
+names no ``_SUCCESS`` output marks its group as pending: it recomputes.
 
 A valid manifest (fingerprint match + parquet ``_SUCCESS``) short-circuits
 to a scan of the materialized output, so a killed run recomputes only the
@@ -24,7 +27,14 @@ groups that had not published (BASELINE.json north_rule "resumable from
 checkpoint with per-partition lineage + metrics").  ``run_checkpointed`` is
 the one checkpointed pipeline: per-group ``triples`` (and ``links``) from
 the fused kernels, then the graph tail as whole-input stages under the
-same manifest format.
+same manifest format.  A full resume runs no Spark job; a rerun of k lost
+groups runs k writes plus one transcripts-schema job.
+
+The runner reads the checkpoint directory, the input files' ``os.stat``,
+the group outputs' parquet footers and the dimension tables (the dicts the
+kernels broadcast, via pyarrow) through the driver's own filesystem: it
+assumes every path it is given is local to the driver (a local or mounted
+directory), as in ``local[*]`` mode.
 """
 
 from __future__ import annotations
@@ -41,11 +51,12 @@ import time
 from typing import Callable, Dict, List, Optional
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 # bump to invalidate all checkpoints on a format change ("2": group outputs
-# no longer carry a _pid column); rule changes are caught by code_fingerprint
-FORMAT_VERSION = "2"
+# no longer carry a _pid column; "3": manifests carry their output's read
+# schema); rule changes are caught by code_fingerprint
+FORMAT_VERSION = "3"
 
 # the rule code a checkpoint's rows depend on: every module of the
 # ``functions`` package, the kernels (fused), canonicalize, and the
@@ -98,6 +109,22 @@ def input_fingerprint(paths: List[str], extra: str = "") -> str:
         else:
             add(p)
     return h.hexdigest()[:24]
+
+
+def read_schema(dt: T.DataType) -> T.DataType:
+    """``dt`` as a parquet scan of data written with it reports it: every
+    field, array element and map value nullable, names, types and field
+    metadata kept."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, read_schema(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(read_schema(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(read_schema(dt.keyType), read_schema(dt.valueType), True)
+    return dt
 
 
 class PartitionedStageRunner:
@@ -184,19 +211,30 @@ class PartitionedStageRunner:
                 counts[pid] = counts.get(pid, 0) + rows
         return [{"pid": p, "rows": r} for p, r in sorted(counts.items()) if r]
 
-    def is_complete(
+    def valid_manifest(
         self, name: str, gi: int, files: List[str], fingerprint: str
-    ) -> bool:
-        """Group ``gi`` of stage ``name`` has published output for exactly
-        these files under this shared fingerprint."""
+    ) -> Optional[Dict]:
+        """The manifest of group ``gi`` of stage ``name`` when the group has
+        published output for exactly these files under this shared
+        fingerprint, else None."""
         m = self._manifest(name, gi)
-        return (
+        ok = (
             m is not None
             and m.get("fingerprint") == input_fingerprint(files, extra=fingerprint)
             and m.get("files") == files
+            and "schema" in m
             and os.path.exists(
                 os.path.join(self._stage_dir(name), f"g{gi:05d}", "_SUCCESS")
             )
+        )
+        return m if ok else None
+
+    def _read(self, manifests: List[Dict]) -> DataFrame:
+        """Scan of the groups' outputs with the schema their manifests
+        recorded: no schema-inference job."""
+        schema = T.StructType.fromJson(manifests[0]["schema"])
+        return self.spark.read.schema(schema).parquet(
+            *(m["output"] for m in manifests)
         )
 
     def _group(
@@ -206,16 +244,18 @@ class PartitionedStageRunner:
         files: List[str],
         fingerprint: str,
         build: Callable[[List[str]], DataFrame],
-    ) -> str:
+    ) -> Dict:
         """Materialize one group unless its checkpoint is valid; return the
-        group's output directory."""
-        gout = os.path.join(self._stage_dir(name), f"g{gi:05d}")
-        if self.is_complete(name, gi, files, fingerprint):
+        group's manifest."""
+        valid = self.valid_manifest(name, gi, files, fingerprint)
+        if valid is not None:
             self.events.append({"stage": name, "group": gi, "action": "resumed"})
-            return gout
+            return valid
+        gout = os.path.join(self._stage_dir(name), f"g{gi:05d}")
         os.makedirs(self._stage_dir(name), exist_ok=True)
         t0 = time.time()
-        build(files).write.mode("overwrite").parquet(gout)
+        df = build(files)
+        df.write.mode("overwrite").parquet(gout)
         part_counts = self._partition_counts(gout)
         manifest = {
             "stage": name,
@@ -223,6 +263,7 @@ class PartitionedStageRunner:
             "files": files,
             "fingerprint": input_fingerprint(files, extra=fingerprint),
             "output": gout,
+            "schema": read_schema(df.schema).jsonValue(),
             "rows": sum(p["rows"] for p in part_counts),
             "partitions": part_counts,
             "wall_sec": round(time.time() - t0, 3),
@@ -233,7 +274,7 @@ class PartitionedStageRunner:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, mpath)  # atomic publish AFTER the data _SUCCESS
         self.events.append({"stage": name, "group": gi, "action": "computed"})
-        return gout
+        return manifest
 
     def stage(
         self,
@@ -254,11 +295,11 @@ class PartitionedStageRunner:
         dimension-table change still invalidates everything — correct:
         every group's output depends on the dims.)"""
         groups = self.plan_groups(input_files, group_size)
-        return self.spark.read.parquet(*(
+        return self._read([
             self._group(name, gi, files, fingerprint, build)
             for gi, files in enumerate(groups)
             if files  # empty hash bucket — stable index, nothing to run
-        ))
+        ])
 
     def whole(
         self,
@@ -271,8 +312,8 @@ class PartitionedStageRunner:
         (index 0) over all of them (``input_files`` sorted, as
         ``list_parquet_files`` returns them), so touching any file
         recomputes it."""
-        return self.spark.read.parquet(
-            self._group(name, 0, input_files, fingerprint, lambda _fs: build())
+        return self._read(
+            [self._group(name, 0, input_files, fingerprint, lambda _fs: build())]
         )
 
 
@@ -332,24 +373,27 @@ def run_checkpointed(
 
     @functools.cache
     def broadcasts():
-        # built on the first pending group: a full resume runs no job here
-        return pl.build_broadcasts(
-            spark,
-            spark.read.parquet(paths["entity_kb"]),
-            spark.read.parquet(paths["figer_map"]),
-        )
+        # built on the first pending group (a full resume never builds
+        # them), from the dimension files read on the driver: no Spark job
+        return pl.read_broadcasts(spark, paths)
+
+    # the group scans share one transcripts schema, inferred (one job) on
+    # the first pending group
+    transcripts_schema: List[T.StructType] = []
+
+    def scan(fs):
+        if not transcripts_schema:
+            transcripts_schema.append(spark.read.parquet(*fs).schema)
+        # sized to its bytes: a ~26 KB group is one Python task, not one per
+        # core (session.MIN_SPLIT_BYTES)
+        return sized(spark.read.schema(transcripts_schema[0]).parquet(*fs), fs)
 
     def per_group(name, kernel):
-        # a group's scan is sized to its bytes: a ~26 KB group is one Python
-        # task, not one per core (session.MIN_SPLIT_BYTES)
         return runner.stage(
             name,
             fp,
             files,
-            lambda fs: kernel(
-                sized(spark.read.parquet(*fs), fs), *broadcasts(),
-                nel_mode=nel_mode,
-            ),
+            lambda fs: kernel(scan(fs), *broadcasts(), nel_mode=nel_mode),
             group_size=group_size,
         )
 
@@ -369,7 +413,7 @@ def run_checkpointed(
     # only invoke it when at least one of its two outputs is missing —
     # a fully-resumed run must not pay the clustering again
     if all(
-        runner.is_complete(s, 0, files, fp) for s in ("entities", "edges")
+        runner.valid_manifest(s, 0, files, fp) for s in ("entities", "edges")
     ):
         ents_df = edges_df = None
     else:

@@ -30,8 +30,10 @@ from __future__ import annotations
 from typing import Dict, Optional, Tuple
 
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from relationextractionpipeline_spark.functions import kbdicts
 from relationextractionpipeline_spark.operators import (
     assemble,
     cache,
@@ -43,7 +45,22 @@ from relationextractionpipeline_spark.operators import (
     segment,
     triples as triples_op,
 )
+from relationextractionpipeline_spark.plans.manifests import list_parquet_files
 from relationextractionpipeline_spark.session import sized
+
+# Above this many candidate rows the KB stops shipping to workers as a
+# Python dict broadcast and linking becomes relational joins (staged-joinlink).
+# Well under DICT_BROADCAST_MAX_ROWS: the dict costs ~100B+/entry in every
+# Python worker, so 2M rows ≈ a few hundred MB per worker — the point where
+# the one-extra-shuffle join path is the cheaper trade.
+AUTO_JOINLINK_KB_ROWS = 2_000_000
+# Hard bound on a KB collected to the driver for a dict broadcast: past it
+# build_broadcasts, build_candidates_broadcast and run_checkpointed raise
+# instead of collecting (an accidentally huge dim would OOM the driver).
+DICT_BROADCAST_MAX_ROWS = 5_000_000
+_KB_DICT_TOO_LARGE = (
+    "entity_kb too large for dict broadcast; use link_mentions_broadcast_join"
+)
 
 
 def load_inputs(spark: SparkSession, paths: Dict[str, str]) -> Tuple[DataFrame, DataFrame, DataFrame]:
@@ -54,52 +71,62 @@ def load_inputs(spark: SparkSession, paths: Dict[str, str]) -> Tuple[DataFrame, 
 
 
 def build_broadcasts(spark: SparkSession, entity_kb: DataFrame, figer_map: DataFrame):
-    """Collect the dimension tables into broadcast dicts.
+    """Collect the dimension tables into broadcast dicts
+    (``kbdicts.build_dicts``).
 
     These are dimension tables by construction (the reference's whole KB fits
     in one gzip JSON dict, ``nel.py:211-219``); a guard keeps an accidentally
     huge dim from being driver-collected — beyond it, use the
     broadcast-join linker (operators/link.py) instead.
     """
-    # guard BEFORE collecting: a LIMIT probe costs one cheap job and keeps an
-    # accidentally-huge dim table from OOMing the driver in toPandas()
-    limit = 5_000_000
-    if entity_kb.limit(limit + 1).count() > limit:
-        raise ValueError(
-            "entity_kb too large for dict broadcast; use link_mentions_broadcast_join"
-        )
-    kb_pdf: pd.DataFrame = entity_kb.toPandas()
-    figer_pdf: pd.DataFrame = figer_map.toPandas()
-    kb: Dict[str, Tuple[str, float]] = {}
-    for surface, url, prior in kb_pdf[["surface", "url", "prior"]].itertuples(index=False):
-        cur = kb.get(surface)
-        # (prior desc, url asc) — the shared linker tie convention; without
-        # the url clause the winner depends on toPandas row order
-        if cur is None or prior > cur[1] or (prior == cur[1] and url < cur[0]):
-            kb[surface] = (url, float(prior))
-    kb_index = {tuple(s.split(" ")): s for s in kb_pdf["surface"]}
-    figer = dict(zip(figer_pdf["url"], figer_pdf["figer_type"]))
-    sc = spark.sparkContext
-    return sc.broadcast(kb), sc.broadcast(kb_index), sc.broadcast(figer)
+    kb_pdf = _collect_bounded(
+        entity_kb.select(*kbdicts.KB_COLUMNS), _KB_DICT_TOO_LARGE
+    )
+    figer_pdf = figer_map.select(*kbdicts.FIGER_COLUMNS).toPandas()
+    return tuple(
+        map(spark.sparkContext.broadcast, kbdicts.build_dicts(kb_pdf, figer_pdf))
+    )
+
+
+def _collect_bounded(df: DataFrame, error: str) -> pd.DataFrame:
+    """``df`` on the driver, or ``ValueError(error)`` when it has more than
+    ``DICT_BROADCAST_MAX_ROWS`` rows: one LIMIT collect, so the guard costs
+    no job of its own and never collects more than the bound + 1 rows."""
+    pdf = df.limit(DICT_BROADCAST_MAX_ROWS + 1).toPandas()
+    if len(pdf) > DICT_BROADCAST_MAX_ROWS:
+        raise ValueError(error)
+    return pdf
+
+
+def read_broadcasts(spark: SparkSession, paths: Dict[str, str]):
+    """``build_broadcasts`` from the dimension files, read on the driver
+    with pyarrow: no Spark job.  The row guard sums the entity KB's parquet
+    footers, so it raises before any row is read."""
+    kb_files = list_parquet_files(paths["entity_kb"])
+    if sum(pq.read_metadata(f).num_rows for f in kb_files) > DICT_BROADCAST_MAX_ROWS:
+        raise ValueError(_KB_DICT_TOO_LARGE)
+    kb_pdf = pq.read_table(kb_files, columns=kbdicts.KB_COLUMNS).to_pandas()
+    figer_pdf = pq.read_table(
+        list_parquet_files(paths["figer_map"]), columns=kbdicts.FIGER_COLUMNS
+    ).to_pandas()
+    return tuple(
+        map(spark.sparkContext.broadcast, kbdicts.build_dicts(kb_pdf, figer_pdf))
+    )
 
 
 def build_candidates_broadcast(spark: SparkSession, entity_kb: DataFrame):
     """Broadcast the FULL candidate lists per surface — what a context-aware
     disambiguator needs (the max-prior dict from build_broadcasts keeps only
     the winner).  surface -> [(url, prior)] sorted (prior desc, url asc), so
-    index 0 is the deterministic max-prior candidate.  Same LIMIT-probe guard
+    index 0 is the deterministic max-prior candidate.  Same bounded collect
     as build_broadcasts."""
-    limit = 5_000_000
-    if entity_kb.limit(limit + 1).count() > limit:
-        raise ValueError(
-            "entity_kb too large for candidate-list broadcast; "
-            "use link_mentions_broadcast_join"
-        )
-    pdf: pd.DataFrame = entity_kb.toPandas()
+    pdf = _collect_bounded(
+        entity_kb.select(*kbdicts.KB_COLUMNS),
+        "entity_kb too large for candidate-list broadcast; "
+        "use link_mentions_broadcast_join",
+    )
     cands: Dict[str, list] = {}
-    for surface, url, prior in pdf[["surface", "url", "prior"]].itertuples(
-        index=False
-    ):
+    for surface, url, prior in pdf.itertuples(index=False):
         cands.setdefault(surface, []).append((url, float(prior)))
     for surface in cands:
         cands[surface].sort(key=lambda c: (-c[1], c[0]))
@@ -219,12 +246,6 @@ def run_fused(
     )
 
 
-# Above this many candidate rows the KB stops shipping to workers as a
-# Python dict broadcast and linking becomes relational joins (staged-joinlink).
-# Well under build_broadcasts' hard 5M guard: the dict costs ~100B+/entry in
-# every Python worker, so 2M rows ≈ a few hundred MB per worker — the point
-# where the one-extra-shuffle join path is the cheaper trade.
-AUTO_JOINLINK_KB_ROWS = 2_000_000
 
 
 def run_pipeline(

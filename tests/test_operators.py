@@ -199,6 +199,22 @@ def test_lsh_multi_recall_dominates_single_table(spark, emb):
     spark.catalog.clearCache()
 
 
+def test_query_collect_is_one_bounded_job(spark):
+    """The query-table collect is one LIMIT job and raises above its
+    bound."""
+    from tests.test_pipeline import spark_jobs
+
+    qs = spark.createDataFrame(
+        [(i, [float(i)]) for i in range(3)], "query_id long, embedding array<double>"
+    )
+    with spark_jobs(spark) as jobs:
+        pdf = similarity._collect_query_pdf(qs, ["query_id", "embedding"], max_rows=3)
+    assert len(jobs) == 1
+    assert sorted(pdf["query_id"]) == [0, 1, 2]
+    with pytest.raises(ValueError, match="exceeds 2 rows"):
+        similarity._collect_query_pdf(qs, ["query_id", "embedding"], max_rows=2)
+
+
 def test_ivf_index_materialization_roundtrip(spark, emb, tmp_path):
     """build_ivf_index → ivf_topk_from_index reproduces the self-training
     ivf_topk exactly (same deterministic centroids), and the cell table is

@@ -4,6 +4,9 @@ kernels ≡ the joinlink UDF chain, invariants (text equality, lineage), metamor
 
 from __future__ import annotations
 
+import contextlib
+import uuid
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -37,6 +40,25 @@ def oracle_triples(tiny_pandas):
 @pytest.fixture(scope="module")
 def run(spark, tiny_paths):
     return pipeline.run_pipeline(spark, tiny_paths, mode="staged")
+
+
+@contextlib.contextmanager
+def spark_jobs(spark):
+    """Yields a list that, after the block, holds the ids of the Spark jobs
+    the block ran (its own job group, read from the status tracker)."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    ids: list = []
+    try:
+        yield ids
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+        # the status store is fed by the listener bus: drain it first
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _pr(spark_set: set, oracle_set: set):
@@ -327,6 +349,50 @@ def test_auto_mode_selects_linker_by_kb_size(spark, tiny_paths, monkeypatch):
     b = {tuple(r) for r in auto_big["triples"].select(cols).collect()}
     assert a == b
     spark.catalog.clearCache()
+
+
+def test_build_broadcasts_runs_two_jobs(spark, tiny_paths):
+    """One bounded collect per dimension table; the dicts equal the ones
+    ``read_broadcasts`` builds from the files on the driver, which runs no
+    job."""
+    entity_kb = spark.read.parquet(tiny_paths["entity_kb"])
+    figer_map = spark.read.parquet(tiny_paths["figer_map"])
+    with spark_jobs(spark) as collected:
+        built = pipeline.build_broadcasts(spark, entity_kb, figer_map)
+    assert len(collected) == 2
+    with spark_jobs(spark) as read:
+        local = pipeline.read_broadcasts(spark, tiny_paths)
+    assert read == []
+    assert [b.value for b in built] == [b.value for b in local]
+    assert all(len(b.value) for b in built)
+
+
+def test_dict_broadcast_guard_raises_above_the_bound(
+    spark, tiny_paths, monkeypatch
+):
+    """Each driver collect of the KB raises once it holds more rows than
+    ``DICT_BROADCAST_MAX_ROWS``; the driver read raises from the footers,
+    before it reads a row."""
+    n = len(pd.read_parquet(tiny_paths["entity_kb"]))
+    entity_kb = spark.read.parquet(tiny_paths["entity_kb"])
+    figer_map = spark.read.parquet(tiny_paths["figer_map"])
+    builders = [
+        lambda: pipeline.build_broadcasts(spark, entity_kb, figer_map),
+        lambda: pipeline.build_candidates_broadcast(spark, entity_kb),
+        lambda: pipeline.read_broadcasts(spark, tiny_paths),
+    ]
+    monkeypatch.setattr(pipeline, "DICT_BROADCAST_MAX_ROWS", n)
+    for build in builders:
+        build()
+    monkeypatch.setattr(pipeline, "DICT_BROADCAST_MAX_ROWS", n - 1)
+
+    def no_read(*_a, **_kw):
+        raise AssertionError("the guard read rows")
+
+    monkeypatch.setattr(pipeline.pq, "read_table", no_read)
+    for build in builders:
+        with pytest.raises(ValueError, match="entity_kb too large"):
+            build()
 
 
 def test_context_scorer_degrades_to_prior_without_context(spark, tiny_paths):

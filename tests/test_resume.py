@@ -14,10 +14,12 @@ import sys
 
 import pandas as pd
 import pytest
+from pyspark.sql import types as T
 
+from relationextractionpipeline_spark.functions import kbdicts
 from relationextractionpipeline_spark.operators import canonicalize
 from relationextractionpipeline_spark.plans import manifests, pipeline
-from tests.test_pipeline import TRIPLE_KEY, _triple_set
+from tests.test_pipeline import TRIPLE_KEY, _triple_set, spark_jobs
 from tests.test_session import REPO, split_conf
 
 
@@ -106,12 +108,13 @@ def test_checkpointed_graph_tail_resume(spark, tiny_paths, tmp_path, monkeypatch
     assert r2["edges"].count() == edges1
 
     # full resume: every stage (incl. graph) resumed, neither clustering
-    # entry point (driver core or distributed CC) ran, and no broadcast
-    # dict was built
+    # entry point (driver core or distributed CC) ran, no broadcast dict
+    # was built (the one builder both broadcast paths call), and no Spark
+    # job ran
     def no_broadcasts(*_a, **_kw):
         raise AssertionError("a full resume built the broadcasts")
 
-    monkeypatch.setattr(pipeline, "build_broadcasts", no_broadcasts)
+    monkeypatch.setattr(kbdicts, "build_dicts", no_broadcasts)
     calls = []
     for name in ("_driver_components", "connected_components"):
         real = getattr(canonicalize, name)
@@ -121,7 +124,9 @@ def test_checkpointed_graph_tail_resume(spark, tiny_paths, tmp_path, monkeypatch
                 calls.append(_name) or _real(*a, **kw)
             ),
         )
-    r3 = manifests.run_checkpointed(spark, tiny_paths, ck, graph=True)
+    with spark_jobs(spark) as jobs:
+        r3 = manifests.run_checkpointed(spark, tiny_paths, ck, graph=True)
+    assert jobs == []
     assert _events(r3["runner"]) == {
         (s, "resumed")
         for s in ("triples", "links", "entities", "edges", "predicates")
@@ -356,6 +361,51 @@ def test_fault_recomputes_only_that_group(spark, sharded_ck, fault):
     assert _triple_set(r["triples"].toPandas()) == cold
 
 
+@pytest.mark.parametrize("lost", [0, 1, 2])
+def test_rerun_runs_one_job_per_lost_group(spark, sharded_ck, lost):
+    """A rerun that lost ``lost`` groups runs one transcripts-schema job
+    and one write per lost group, and a full resume runs none: the
+    dimension dicts are read on the driver and every stage is read with
+    its manifests' schema."""
+    paths, ck, groups, cold = sharded_ck
+    for gi in groups[:lost]:
+        _kill(ck, "triples", gi)
+    with spark_jobs(spark) as jobs:
+        r = manifests.run_checkpointed(spark, paths, ck, group_size=1)
+    assert len(jobs) == (1 + lost if lost else 0)
+    acts = {(e["group"], e["action"]) for e in r["runner"].events}
+    assert acts == {
+        (g, "computed" if g in groups[:lost] else "resumed") for g in groups
+    }
+    assert _triple_set(r["triples"].toPandas()) == cold
+
+
+def test_format_2_group_without_schema_recomputes(
+    spark, tiny_paths, tmp_path, monkeypatch
+):
+    """Groups published under format "2" (a manifest without ``schema``)
+    recompute, and their rerun records the schema."""
+    ck = str(tmp_path / "ck")
+    with monkeypatch.context() as m:
+        m.setattr(manifests, "FORMAT_VERSION", "2")
+        m.setattr(
+            manifests, "code_fingerprint", manifests.code_fingerprint.__wrapped__
+        )
+        manifests.run_checkpointed(spark, tiny_paths, ck, group_size=1)
+    sdir = os.path.join(ck, "triples")
+    mpaths = [
+        os.path.join(sdir, f) for f in os.listdir(sdir)
+        if f.endswith("._manifest.json")
+    ]
+    for mp in mpaths:
+        m = json.load(open(mp))
+        del m["schema"]
+        json.dump(m, open(mp, "w"))
+    r = manifests.run_checkpointed(spark, tiny_paths, ck, group_size=1)
+    assert _events(r["runner"]) == {("triples", "computed")}
+    assert all("schema" in json.load(open(mp)) for mp in mpaths)
+
+
 def test_old_format_group_with_pid_recomputes(
     spark, tiny_paths, tmp_path, monkeypatch
 ):
@@ -408,12 +458,47 @@ def test_group_kernel_input_is_one_partition(
     assert seen == [1]
 
 
-def test_manifest_counts_equal_spark_counts(spark, tiny_paths, tmp_path):
+GRAPH_STAGES = ("triples", "links", "predicates", "entities", "edges")
+
+
+@pytest.fixture(scope="module")
+def graph_ck(spark, tiny_paths, tmp_path_factory):
+    """A cold ``graph=True`` checkpoint (group_size=2) and its outputs."""
+    ck = str(tmp_path_factory.mktemp("graph") / "ck")
+    return ck, manifests.run_checkpointed(
+        spark, tiny_paths, ck, graph=True, group_size=2
+    )
+
+
+def test_stage_schemas_are_the_read_schemas(spark, tiny_paths, graph_ck):
+    """Each stage, cold and resumed, reads its groups with the schema a
+    ``spark.read.parquet`` of its group dirs infers, recorded in every
+    group's manifest."""
+    ck, cold = graph_ck
+    resumed = manifests.run_checkpointed(
+        spark, tiny_paths, ck, graph=True, group_size=2
+    )
+    assert {a for _s, a in _events(resumed["runner"])} == {"resumed"}
+    for stage in GRAPH_STAGES:
+        sdir = os.path.join(ck, stage)
+        mpaths = sorted(
+            os.path.join(sdir, f) for f in os.listdir(sdir)
+            if f.endswith("._manifest.json")
+        )
+        inferred = spark.read.parquet(
+            *(mp[: -len("._manifest.json")] for mp in mpaths)
+        ).schema
+        assert cold[stage].schema == inferred, stage
+        assert resumed[stage].schema == inferred, stage
+        for mp in mpaths:
+            assert T.StructType.fromJson(json.load(open(mp))["schema"]) == inferred
+
+
+def test_manifest_counts_equal_spark_counts(spark, graph_ck):
     """Footer-read manifest counts: ``rows`` and every ``partitions[i]``
     equal a Spark count of that group's output, for every stage of a graph
     run plus one stage that writes several partitions."""
-    ck = str(tmp_path / "ck")
-    r = manifests.run_checkpointed(spark, tiny_paths, ck, graph=True, group_size=2)
+    ck, r = graph_ck
     r["runner"].whole(
         "spread", "fp", [], lambda: spark.range(0, 1000, numPartitions=5)
     )
@@ -424,7 +509,7 @@ def test_manifest_counts_equal_spark_counts(spark, tiny_paths, tmp_path):
         if f.endswith("._manifest.json")
     ]
     assert {os.path.basename(os.path.dirname(p)) for p in mpaths} == {
-        "triples", "links", "predicates", "entities", "edges", "spread"
+        *GRAPH_STAGES, "spread"
     }
     for mp in mpaths:
         m = json.load(open(mp))
@@ -510,8 +595,8 @@ def _code_fingerprint_of(root):
     return proc.stdout.strip()
 
 
-@pytest.mark.parametrize("edit", [None, "functions/rules.py", "operators/fused.py",
-                                  "operators/canonicalize.py"])
+@pytest.mark.parametrize("edit", [None, "functions/rules.py", "functions/kbdicts.py",
+                                  "operators/fused.py", "operators/canonicalize.py"])
 def test_code_fingerprint_follows_rule_sources(tmp_path, edit):
     """A copy of the package has this package's code fingerprint until one
     of its rule sources changes."""
